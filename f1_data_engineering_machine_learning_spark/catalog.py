@@ -1342,39 +1342,28 @@ def order_snapshot_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time snapshot SERIES in one pass — the generic engine behind
     the reference's feature store (/root/reference/sql/feature_store_drivers.sql
     + the per-date loop at /root/reference/scripts/spark_ops.py:189-191),
-    run in scale mode: broadcast date dim x facts, one shuffle for all 8
-    snapshots (plans/snapshot.py)."""
+    run in scale mode: per-customer running windows over the orders plus
+    one marker row per (customer, snapshot date), all 8 snapshots in one
+    pass (plans/snapshot.py)."""
     from f1_data_engineering_machine_learning_spark.plans.snapshot import (
         SnapshotSpec,
+        asof,
         scoped_count,
+        scoped_sum,
         snapshot_single_pass,
+        trailing,
     )
 
-    price = F.col("o_totalprice")
+    price = F.col("o_totalprice").cast("decimal(30,2)")
     spec = SnapshotSpec(
         entity_keys=["o_custkey"],
         date_col="o_orderdate",
-        scopes={
-            "life": lambda ref, d: d <= ref,
-            "90d": lambda ref, d: d >= ref - F.expr("INTERVAL 90 DAY"),
-        },
+        scopes={"life": asof(), "90d": trailing("90 DAY")},
         aggs=[
             ("qtd_life", "life", scoped_count()),
-            (
-                "total_life",
-                "life",
-                lambda c: F.sum(F.when(c, price.cast("decimal(30,2)"))).cast(
-                    "double"
-                ),
-            ),
+            ("total_life", "life", scoped_sum(price)),
             ("qtd_90d", "90d", scoped_count()),
-            (
-                "total_90d",
-                "90d",
-                lambda c: F.sum(F.when(c, price.cast("decimal(30,2)"))).cast(
-                    "double"
-                ),
-            ),
+            ("total_90d", "90d", scoped_sum(price)),
         ],
     )
     out = snapshot_single_pass(_t(spark, sf_dir, "orders"), spec, _SNAP_DATES)
@@ -1382,9 +1371,9 @@ def order_snapshot_series(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("dtRef", "yyyy-MM-dd").alias("dtRef"),
         "o_custkey",
         F.col("qtd_life").cast("long").alias("qtd_life"),
-        "total_life",
+        F.col("total_life").cast("double").alias("total_life"),
         F.col("qtd_90d").cast("long").alias("qtd_90d"),
-        "total_90d",
+        F.col("total_90d").cast("double").alias("total_90d"),
     )
 
 

@@ -10,10 +10,13 @@ available, parquet otherwise).
 
 from __future__ import annotations
 
+import csv
 import glob as _glob
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from f1_data_engineering_machine_learning_spark.session import delta_enabled
 
@@ -45,16 +48,48 @@ def resolve_glob(pattern: str) -> list[str]:
     return files
 
 
+def _csv_header(path: str, sep: str = ";") -> list[str]:
+    """Column names of a CSV file's header line, made safe the way Spark's
+    CSV reader makes them: an empty name becomes ``_c<i>``, and names that
+    repeat (case-insensitively) get their position appended."""
+    with open(path, encoding="utf-8", newline="") as fh:
+        names = next(csv.reader(fh, delimiter=sep), [])
+    lowered = [n.lower() for n in names if n]
+    dups = {n for n in lowered if lowered.count(n) > 1}
+    return [
+        f"_c{i}" if not n else f"{n}{i}" if n.lower() in dups else n
+        for i, n in enumerate(names)
+    ]
+
+
 def read_csv_all_string(
     spark: SparkSession, paths: str | list[str], sep: str = ";"
 ) -> DataFrame:
     """Multi-file CSV scan with header and NO schema inference — every column
     lands as StringType (the bronze contract,
     /root/reference/scripts/02_bronze.py:97). Typing happens downstream.
+
+    The schema comes from the first file's header, read here, so Spark runs
+    no header job. A glob whose directory part is literal is handed to
+    Spark as that one directory plus ``pathGlobFilter``: a list of many
+    files would cost a parallel file-listing job, one directory costs none.
+    The directory form is used only when Spark resolves it to exactly the
+    glob's files (its listing also descends into subdirectories and skips
+    ``_``/``.`` names); otherwise the file list is passed.
     """
+    files = resolve_glob(paths) if isinstance(paths, str) else list(paths)
+    schema = StructType(
+        [StructField(n, StringType()) for n in _csv_header(files[0], sep)]
+    )
+    reader = spark.read.schema(schema).option("header", True).option("sep", sep)
     if isinstance(paths, str):
-        paths = resolve_glob(paths)
-    return spark.read.csv(paths, sep=sep, header=True)
+        directory, pattern = os.path.split(os.path.expanduser(paths))
+        if not _glob.has_magic(directory):
+            df = reader.option("pathGlobFilter", pattern).csv(directory or ".")
+            listed = {urlparse(f).path for f in df.inputFiles()}
+            if listed == {os.path.abspath(f) for f in files}:
+                return df
+    return reader.csv(files)
 
 
 def read_jsonl(

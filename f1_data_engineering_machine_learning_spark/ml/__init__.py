@@ -7,6 +7,9 @@ goal honest (nothing leaves the executors until the final top-k frames).
 """
 
 from f1_data_engineering_machine_learning_spark.ml.model import (  # noqa: F401
+    RACE_GAIN_FEATURES,
+    RACE_POSITION_FEATURES,
+    SPLIT_COL,
     SPRINT_GAIN_FEATURES,
     SPRINT_POSITION_FEATURES,
     champion_model,

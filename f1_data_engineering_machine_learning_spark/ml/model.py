@@ -10,7 +10,9 @@ Maps the reference's pandas/sklearn stage
   group so a driver-year never straddles train/test, ~80/20, seeded
   determinism — is preserved and tested.
 - M3 sentinel imputation (140-172)      -> fillna(99) on the 12 sprint
-  position features, fillna(0) on the 6 sprint gain features
+  position features, fillna(0) on the 6 sprint gain features; the same
+  sentinels for the race-only twins (a driver whose first session is a
+  sprint has no race in scope)
 - M4 RandomForest (174-185)             -> RandomForestClassifier(seed=42,
   minInstancesPerNode=20) after VectorAssembler
 - M5 scoring (215-230)                  -> transform + probability[1]
@@ -38,6 +40,17 @@ SPRINT_GAIN_FEATURES = [
     for stat in ("avg", "median")
     for suffix in ("", "1Year", "CurrentTemp")
 ]
+#: the race-only twins, NULL when a snapshot has sprints but no race in
+#: scope; they take the same sentinels
+RACE_POSITION_FEATURES = [c.replace("Sprint", "Race") for c in SPRINT_POSITION_FEATURES]
+RACE_GAIN_FEATURES = [c.replace("Sprint", "Race") for c in SPRINT_GAIN_FEATURES]
+
+#: share of (DriverId, dtYear) groups the group split sends to test
+TEST_FRAC = 0.2
+
+#: the column ``train_champion_model`` labels each scored row with:
+#: ``"train"``, ``"test"``, ``"oot"``, or NULL for rows in no split
+SPLIT_COL = "split"
 
 #: columns that are identifiers/labels, never features
 #: (/root/reference/scripts/05_ml_model.py:121-126)
@@ -57,41 +70,46 @@ def oot_split(df: DataFrame, oot_year: int = 2024) -> tuple[DataFrame, DataFrame
     )
 
 
-def group_random_split(
-    df: DataFrame,
-    group_cols: Sequence[str] = ("DriverId", "dtYear"),
-    test_frac: float = 0.2,
-    seed: int = 42,
-) -> tuple[DataFrame, DataFrame]:
-    """Group-integral random split (M2): all rows of a (DriverId, dtYear)
-    land on the same side. ``F.rand(seed)`` over the distinct group frame is
-    deterministic for a fixed partitioning — we repartition(1) the (tiny)
-    group frame so the assignment is stable run-to-run."""
-    groups = (
+def _group_draws(df: DataFrame, group_cols: Sequence[str], seed: int) -> DataFrame:
+    """One ``F.rand(seed)`` draw ``__r`` per distinct group. The (tiny) group
+    frame is repartition(1)-ed and sorted, so the draws are stable run to
+    run."""
+    return (
         df.select(*group_cols)
         .distinct()
         .repartition(1)
         .sortWithinPartitions(*group_cols)
         .withColumn("__r", F.rand(seed))
     )
-    train_groups = groups.filter(F.col("__r") >= test_frac).drop("__r")
-    test_groups = groups.filter(F.col("__r") < test_frac).drop("__r")
+
+
+def group_random_split(
+    df: DataFrame,
+    group_cols: Sequence[str] = ("DriverId", "dtYear"),
+    test_frac: float = TEST_FRAC,
+    seed: int = 42,
+) -> tuple[DataFrame, DataFrame]:
+    """Group-integral random split (M2): all rows of a (DriverId, dtYear)
+    land on the same side — two filters over one draw per group."""
     on = list(group_cols)
+    drawn = df.join(F.broadcast(_group_draws(df, on, seed)), on, "inner")
+    r = F.col("__r")
     return (
-        df.join(F.broadcast(train_groups), on, "inner"),
-        df.join(F.broadcast(test_groups), on, "inner"),
+        drawn.filter(r >= test_frac).drop("__r"),
+        drawn.filter(r < test_frac).drop("__r"),
     )
 
 
 def impute_sentinels(df: DataFrame) -> DataFrame:
-    """M3: 99 into sprint position features, 0 into sprint gain features —
-    NULL here means 'never started a sprint in scope', and the reference
-    encodes that as worst-possible position / zero gain."""
+    """M3: 99 into sprint and race-only position features, 0 into their
+    gain features — NULL here means 'never started a sprint (or a race) in
+    scope', and the reference encodes that as worst-possible position /
+    zero gain."""
     fills: dict[str, float] = {}
-    for c in SPRINT_POSITION_FEATURES:
+    for c in SPRINT_POSITION_FEATURES + RACE_POSITION_FEATURES:
         if c in df.columns:
             fills[c] = 99.0
-    for c in SPRINT_GAIN_FEATURES:
+    for c in SPRINT_GAIN_FEATURES + RACE_GAIN_FEATURES:
         if c in df.columns:
             fills[c] = 0.0
     return df.fillna(fills)
@@ -189,11 +207,26 @@ def strip_training_summary(model) -> None:
 def train_champion_model(
     abt: DataFrame, oot_year: int = 2024, seed: int = 42
 ) -> dict:
-    """End-to-end M1-M7: split, impute, train, score, evaluate. Returns the
-    fitted model, per-split metrics, and importances; nothing is collected
-    except scalar metrics."""
-    pool, oot = oot_split(abt, oot_year)
-    train, test = group_random_split(pool, seed=seed)
+    """End-to-end M1-M7: split, impute, train, score, evaluate.
+
+    The group split is drawn once and stamped on every ABT row as
+    ``SPLIT_COL``; the imputed frame is persisted for the fit, scored once,
+    and every split is evaluated from that one scored frame. Returns the
+    fitted model, per-split metrics, importances, and ``scored``: every ABT
+    row with ``predict``/``proba``, persisted — the caller unpersists it.
+    Nothing is collected except scalar metrics."""
+    on = ["DriverId", "dtYear"]
+    pool, _ = oot_split(abt, oot_year)
+    year, r = F.col("dtYear"), F.col("__r")
+    split = F.when(year == oot_year, "oot").when(
+        year < oot_year,
+        F.when(r < TEST_FRAC, "test").when(r >= TEST_FRAC, "train"),
+    )
+    frame = impute_sentinels(
+        abt.join(F.broadcast(_group_draws(pool, on, seed)), on, "left")
+        .withColumn(SPLIT_COL, split)
+        .drop("__r")
+    ).persist()
     feats = feature_columns(abt)
     numeric_feats = [
         c
@@ -201,26 +234,34 @@ def train_champion_model(
         if dict(abt.dtypes)[c] in ("int", "bigint", "double", "float")
     ]
 
-    train_i = impute_sentinels(train)
+    present = frame.select(SPLIT_COL, "flChamp").distinct().collect()
     # Guard the degenerate split: a training pool whose group split left
     # a single label class fits a 1-class forest whose probability
     # vectors have length 1, and the AUC evaluator then dies with an
     # opaque "rawPredictionCol vectors must have length=2". Surface the
     # real cause instead — tight OOT bounds on small pools hit this
     # (e.g. the fixture's oot_year=2022 leaves one season to split).
-    n_classes = train_i.select("flChamp").distinct().count()
-    if n_classes < 2:
+    if sum(1 for row in present if row[0] == "train") < 2:
+        frame.unpersist()
         raise ValueError(
             "training split has a single flChamp class; widen the pool "
             "(earlier oot_year) or re-seed group_random_split"
         )
-    model = champion_model(numeric_feats).fit(train_i)
+    model = champion_model(numeric_feats).fit(
+        frame.filter(F.col(SPLIT_COL) == "train")
+    )
     strip_training_summary(model)
 
+    scored = score(model, frame).persist()
     result = {"model": model, "features": numeric_feats, "metrics": {}}
-    for name, split in (("train", train), ("test", test), ("oot", oot)):
-        scored = score(model, impute_sentinels(split))
-        if scored.limit(1).count() > 0:
-            result["metrics"][name] = evaluate(scored)
+    splits = {row[0] for row in present}
+    for name in ("train", "test", "oot"):
+        if name in splits:
+            result["metrics"][name] = evaluate(
+                scored.filter(F.col(SPLIT_COL) == name)
+            )
+    # the train evaluation has materialized every partition of ``scored``
+    frame.unpersist()
     result["importances"] = feature_importances(model, numeric_feats)
+    result["scored"] = scored
     return result

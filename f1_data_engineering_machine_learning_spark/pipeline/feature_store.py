@@ -17,7 +17,7 @@ feature name and therefore IS the contract.
 
 Modes: ``driver_feature_snapshot`` (one date — the reference's unit of
 work), ``driver_feature_store`` (many dates: 'loop' = reference-compatible
-job-per-date; 'single_pass' = one-shuffle scale mode; identical output,
+job-per-date; 'single_pass' = the running-window engine; identical output,
 tested).
 """
 
@@ -31,7 +31,10 @@ from pyspark.sql import functions as F
 from f1_data_engineering_machine_learning_spark.functions import sentinel_int, str_to_date
 from f1_data_engineering_machine_learning_spark.plans.snapshot import (
     DT_REF,
+    Agg,
     SnapshotSpec,
+    asof,
+    current_period,
     scoped_avg,
     scoped_count,
     scoped_median,
@@ -39,6 +42,7 @@ from f1_data_engineering_machine_learning_spark.plans.snapshot import (
     snapshot_loop,
     snapshot_one,
     snapshot_single_pass,
+    trailing,
 )
 
 def _metrics() -> list[tuple[str, Column, Column | None]]:
@@ -67,12 +71,12 @@ def _metrics() -> list[tuple[str, Column, Column | None]]:
 _AVG_NAME_OVERRIDES = {("PositionGain", "CurrentTemp"): "avgPositioCurrentTemp"}
 
 
-def _block(scope: str, suffix: str) -> list[tuple[str, str, object]]:
+def _block(scope: str, suffix: str) -> list[tuple[str, str, Agg]]:
     """One scope's aggregate block in the reference's column order."""
     pos, grid = F.col("Position"), F.col("GridPosition")
     race = F.col("identifier") == "race"
     sprint = F.col("identifier") == "sprint"
-    aggs: list[tuple[str, str, object]] = []
+    aggs: list[tuple[str, str, Agg]] = []
     if scope == "life":
         aggs += [
             ("qtdRuns", scope, scoped_count()),
@@ -106,9 +110,9 @@ def _spec() -> SnapshotSpec:
         entity_keys=["DriverId"],
         date_col="dtEvent",
         scopes={
-            "life": lambda ref, d: d <= ref,
-            "year1": lambda ref, d: d >= ref - F.expr("INTERVAL 1 YEAR"),
-            "current": lambda ref, d: F.year(d) >= F.year(ref),
+            "life": asof(),
+            "year1": trailing("1 YEAR"),
+            "current": current_period("year"),
         },
         aggs=(
             _block("life", "")
@@ -192,7 +196,9 @@ def event_dates(
         df = df.filter(F.col("dt") >= F.lit(start).cast("date"))
     if stop:
         df = df.filter(F.col("dt") <= F.lit(stop).cast("date"))
-    return [str(r.dt) for r in df.distinct().orderBy("dt").collect()]
+    # sorted here, not by an orderBy: the range-partitioned sort costs
+    # sampling and shuffle jobs for a few hundred dates
+    return [str(d) for d in sorted(r.dt for r in df.distinct().collect() if r.dt)]
 
 
 def _attach_round(fs: DataFrame, typed: DataFrame) -> DataFrame:
@@ -228,7 +234,7 @@ def driver_feature_store(
 ) -> DataFrame:
     """All snapshot dates. ``mode='loop'`` mirrors the reference's
     job-per-date; ``mode='single_pass'`` computes every snapshot in one
-    shuffle (SURVEY §7 step 3 scale mode)."""
+    pass of per-entity running windows (plans/snapshot.py)."""
     typed = typed_results(results)
     if mode == "loop":
         fs = snapshot_loop(typed, _spec(), dates)

@@ -79,12 +79,15 @@ def run_pipeline(
     abt = spark.read.parquet(f"{workdir}/abt_champions")
 
     result = train_champion_model(abt, oot_year=oot_year)
-    scored = score(result["model"], impute_sentinels(abt))
-
-    last_ref = max(r.dtRef for r in abt.select("dtRef").distinct().collect())
-    top5 = top_entities_at(scored, "dtRef", last_ref)
-    history = score_history(scored, top5).toPandas()
-    race = bar_race_frame(scored.filter(scored.DriverId.isin(top5))).toPandas()
+    # every ABT row, scored once by the training call and still cached
+    scored = result["scored"]
+    try:
+        last_ref = scored.agg(F.max("dtRef")).first()[0]
+        top5 = top_entities_at(scored, "dtRef", last_ref)
+        history = score_history(scored, top5).toPandas()
+        race = bar_race_frame(scored.filter(scored.DriverId.isin(top5))).toPandas()
+    finally:
+        scored.unpersist()
     history.to_csv(f"{workdir}/top5_history.csv", index=False)
     race.to_csv(f"{workdir}/bar_race.csv", index=False)
 

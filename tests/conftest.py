@@ -18,8 +18,10 @@ SF_SMOKE = "/root/testdata/sf0.001"
 # multi-minute soaks, fuzz/property sweeps, and the whole-catalog plan/ANSI
 # sweeps — so it finishes in well under 15 minutes while still exercising
 # every operator's functional contract. The full suite (the builder's own
-# gate before committing) runs with SPARK_GRAFT_FULL_TESTS=1, or a single
-# tier with `-m slow` / `-m "not slow"` explicitly.
+# gate before committing) runs with SPARK_GRAFT_FULL_TESTS=1 (0, false, no
+# and off mean off), or a single tier with `-m slow` / `-m "not slow"`
+# explicitly. A slow test named by node id on the command line is never
+# deselected.
 #
 # Membership is mechanical where possible (any test whose name says fuzz/
 # soak/sweep) plus a named list of the catalog-wide sweeps and property
@@ -56,20 +58,49 @@ def _is_slow(item) -> bool:
     )
 
 
+def _full_tests_enabled() -> bool:
+    value = os.environ.get("SPARK_GRAFT_FULL_TESTS", "").strip().lower()
+    return value not in ("", "0", "false", "no", "off")
+
+
+def _named_node_ids(config) -> list[str]:
+    """Node ids given on the command line (``path::name``), relative to
+    the rootdir like ``item.nodeid``."""
+    ids = []
+    for arg in config.args:
+        if "::" not in arg:
+            continue
+        path, rest = arg.split("::", 1)
+        try:
+            path = Path(path).resolve().relative_to(config.rootpath).as_posix()
+        except ValueError:
+            pass
+        ids.append(f"{path}::{rest}")
+    return ids
+
+
+def _is_named(item, named: list[str]) -> bool:
+    return any(
+        item.nodeid == n or item.nodeid.startswith((n + "[", n + "::"))
+        for n in named
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     for item in items:
         if _is_slow(item):
             item.add_marker(pytest.mark.slow)
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
+    if _full_tests_enabled():
         return
     # An explicit -m expression takes precedence over the default deselect
     if config.getoption("markexpr", default=""):
         return
-    selected = [i for i in items if not _is_slow(i)]
-    deselected = [i for i in items if _is_slow(i)]
+    # a slow test named by node id on the command line still runs
+    named = _named_node_ids(config)
+    deselected = [i for i in items if _is_slow(i) and not _is_named(i, named)]
     if deselected:
         config.hook.pytest_deselected(items=deselected)
-        items[:] = selected
+        items[:] = [i for i in items if not _is_slow(i) or _is_named(i, named)]
 
 
 @pytest.fixture(scope="session")

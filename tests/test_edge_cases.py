@@ -14,6 +14,7 @@ from f1_data_engineering_machine_learning_spark.pipeline import (
 from f1_data_engineering_machine_learning_spark.pipeline.fixtures import results_fixture
 from f1_data_engineering_machine_learning_spark.plans.snapshot import (
     SnapshotSpec,
+    asof,
     scoped_count,
     snapshot_single_pass,
 )
@@ -44,7 +45,7 @@ def test_snapshot_empty_facts(spark):
     spec = SnapshotSpec(
         entity_keys=["k"],
         date_col="d",
-        scopes={"life": lambda ref, d: d <= ref},
+        scopes={"life": asof()},
         aggs=[("n", "life", scoped_count())],
     )
     out = snapshot_single_pass(facts, spec, ["2024-01-01"])
@@ -59,7 +60,7 @@ def test_snapshot_date_before_all_facts(spark):
     spec = SnapshotSpec(
         entity_keys=["k"],
         date_col="d",
-        scopes={"life": lambda ref, d: d <= ref},
+        scopes={"life": asof()},
         aggs=[("n", "life", scoped_count())],
     )
     assert snapshot_single_pass(facts, spec, ["2020-01-01"]).count() == 0
@@ -116,7 +117,7 @@ def test_snapshot_spec_validation(spark):
     bad = SnapshotSpec(
         entity_keys=["k"],
         date_col="d",
-        scopes={"life": lambda ref, d: d <= ref},
+        scopes={"life": asof()},
         aggs=[("n", "nope", scoped_count())],
     )
     with _pytest.raises(ValueError, match="unknown scopes"):

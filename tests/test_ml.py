@@ -6,11 +6,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from f1_data_engineering_machine_learning_spark.ml import (
+    RACE_GAIN_FEATURES,
+    RACE_POSITION_FEATURES,
+    SPLIT_COL,
     SPRINT_GAIN_FEATURES,
     SPRINT_POSITION_FEATURES,
+    evaluate,
     group_random_split,
     impute_sentinels,
     oot_split,
+    score,
     train_champion_model,
 )
 from f1_data_engineering_machine_learning_spark.pipeline import (
@@ -32,6 +37,10 @@ def abt(spark):
 def test_sentinel_feature_lists():
     assert len(SPRINT_POSITION_FEATURES) == 12
     assert len(SPRINT_GAIN_FEATURES) == 6
+    assert len(RACE_POSITION_FEATURES) == 12
+    assert len(RACE_GAIN_FEATURES) == 6
+    assert "medianGridPositionRace1Year" in RACE_POSITION_FEATURES
+    assert "avgPositionRaceGainCurrentTemp" in RACE_GAIN_FEATURES
 
 
 def test_oot_split_partitions(abt):
@@ -104,8 +113,99 @@ def test_group_split_integrity(abt):
 
 def test_impute_sentinels(abt):
     imp = impute_sentinels(abt)
-    for c in SPRINT_POSITION_FEATURES + SPRINT_GAIN_FEATURES:
+    for c in (
+        SPRINT_POSITION_FEATURES
+        + SPRINT_GAIN_FEATURES
+        + RACE_POSITION_FEATURES
+        + RACE_GAIN_FEATURES
+    ):
         assert imp.filter(F.col(c).isNull()).count() == 0
+
+
+def _sprint_debut_row() -> dict:
+    """A new driver whose first (and only) session is the 2022 round-2
+    sprint: every snapshot of theirs has sprint form and no race form."""
+    return {
+        "DriverNumber": "99",
+        "DriverId": "driver_99",
+        "TeamId": "team_99",
+        "Position": "5",
+        "GridPosition": "6",
+        "Status": "Finished",
+        "Points": "4.0",
+        "Laps": "20",
+        "identifier": "sprint",
+        "date": "2022-03-14 15:00:00",
+        "year": "2022",
+        "RoundNumber": "2",
+        "Country": "country_02",
+        "Location": "loc_02",
+        "OfficialEventName": "GP 02 2022",
+    }
+
+
+def test_pipeline_survives_snapshot_without_race_in_scope(spark, tmp_path):
+    """Regression: a snapshot with sprints but no race in scope has NULL
+    race-only features; they must get the sprint sentinels, or the forest
+    dies with 'Vector values MUST NOT be NaN or Infinity'."""
+    from f1_data_engineering_machine_learning_spark.pipeline.fixtures import (
+        results_rows,
+    )
+    from f1_data_engineering_machine_learning_spark.pipeline.run import run_pipeline
+
+    rows = results_rows() + [_sprint_debut_row()]
+    cols = list(rows[0])
+    results = spark.createDataFrame(
+        [[r[c] for c in cols] for r in rows], ", ".join(f"{c} string" for c in cols)
+    )
+    wd = str(tmp_path / "wd")
+    summary = run_pipeline(spark, wd, results=results, oot_year=2023)
+    assert summary["metrics"]["train"]["roc_auc"] > 0.5
+
+    abt = spark.read.parquet(f"{wd}/abt_champions")
+    debut = abt.filter(F.col("DriverId") == "driver_99")
+    assert debut.count() > 0
+    for c in RACE_POSITION_FEATURES + RACE_GAIN_FEATURES:
+        assert debut.filter(F.col(c).isNotNull()).count() == 0, c
+    imputed = impute_sentinels(debut).first()
+    assert all(imputed[c] == 99.0 for c in RACE_POSITION_FEATURES)
+    assert all(imputed[c] == 0.0 for c in RACE_GAIN_FEATURES)
+
+
+#: Spark jobs train_champion_model launches on the fixture ABT (measured
+#: 31): the split/class probe over the one group draw, the forest fit, and
+#: two evaluators per split over the one cached scored frame
+TRAIN_JOB_BUDGET = 31
+
+
+def test_train_champion_model_job_budget_and_split_parity(spark, abt):
+    """One split assignment and one scoring pass: the job count stays
+    within a pinned budget, and every split's metrics equal the reference
+    path (group_random_split + score + evaluate per split)."""
+    from tests.util_jobs import jobs_launched
+
+    result, n_jobs = jobs_launched(
+        spark, lambda: train_champion_model(abt, oot_year=2023)
+    )
+    scored = result["scored"]
+    try:
+        assert n_jobs <= TRAIN_JOB_BUDGET, n_jobs
+        assert scored.is_cached
+        assert scored.count() == abt.count()
+
+        pool, oot = oot_split(abt, 2023)
+        train, test = group_random_split(pool, seed=42)
+        model = result["model"]
+        for name, split in (("train", train), ("test", test), ("oot", oot)):
+            want = evaluate(score(model, impute_sentinels(split)))
+            got = result["metrics"][name]
+            for metric in ("accuracy", "roc_auc"):
+                assert abs(got[metric] - want[metric]) <= 1e-12, (name, metric)
+            assert (
+                scored.filter(F.col(SPLIT_COL) == name).count() == split.count()
+            )
+    finally:
+        scored.unpersist()
 
 
 def test_train_champion_model(abt):

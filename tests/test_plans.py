@@ -350,7 +350,9 @@ def test_equidepth_rank_tail_reuses_ranged_materialization(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan  # literals replaced the
     # one-row bounds broadcast; bin ids come from a CASE WHEN chain
-    assert re.search(r"CASE WHEN \(__v#\d+ > [0-9.E]+\) THEN 1 ELSE 0 END", plan)
+    assert re.search(
+        r"CASE WHEN \(__v#\d+ > -?[0-9.]+(?:E-?[0-9]+)?\) THEN 1 ELSE 0 END", plan
+    )
     assert "aggregate(" not in plan  # no interpreted HOF fold
     # the n_bins-row count group-by
     assert re.search(r"(Hash|Sort)Aggregate", plan)

@@ -67,6 +67,58 @@ def test_raw_to_bronze_roundtrip(spark, tmp_path):
     assert bronze.filter("Position IS NULL").count() > 0
 
 
+def _write_csvs(directory, header: str, n: int) -> list[str]:
+    directory.mkdir()
+    paths = []
+    for i in range(n):
+        p = directory / f"part_{i:02d}.csv"
+        p.write_text(f"{header}\n{i};x{i};;q;\"v;{i}\"\n")
+        paths.append(str(p))
+    return paths
+
+
+def test_read_csv_all_string_launches_no_job(spark, tmp_path):
+    """A glob over one directory is scanned as that directory plus a name
+    filter: no file-listing job and no header job before an action, and
+    the header names (quoted, empty, repeated) are the ones Spark infers."""
+    from f1_data_engineering_machine_learning_spark.io import read_csv_all_string
+    from tests.util_jobs import jobs_launched
+
+    header = 'Id;"Driver;Name";;id;"Quoted Name"'
+    # more files than Spark lists on the driver for an explicit path list
+    paths = _write_csvs(tmp_path / "raw", header, 40)
+    df, n_jobs = jobs_launched(
+        spark, lambda: read_csv_all_string(spark, str(tmp_path / "raw" / "*.csv"))
+    )
+    assert n_jobs == 0
+    inferred = spark.read.csv(paths, sep=";", header=True)
+    assert df.columns == inferred.columns
+    assert df.columns == ["Id0", "Driver;Name", "_c2", "id3", "Quoted Name"]
+    assert all(t == "string" for _, t in df.dtypes)
+    assert sorted(df.inputFiles()) == sorted(f"file://{p}" for p in paths)
+    assert sorted(df.collect()) == sorted(inferred.collect())
+
+
+def test_read_csv_all_string_glob_matching_hidden_files(spark, tmp_path):
+    """Spark's directory listing skips ``_``/``.`` names and descends into
+    subdirectories; when that listing differs from the glob, the scan
+    falls back to the file list and reads what an explicit list reads."""
+    from f1_data_engineering_machine_learning_spark.io import read_csv_all_string
+
+    paths = _write_csvs(tmp_path / "raw", "a;b;c;d;e", 3)
+    (tmp_path / "raw" / "_part_hidden.csv").write_text("a;b;c;d;e\nh;h;h;h;h\n")
+    (tmp_path / "raw" / "sub").mkdir()
+    (tmp_path / "raw" / "sub" / "part_nested.csv").write_text("a;b;c;d;e\nn;n;n;n;n\n")
+    df = read_csv_all_string(spark, str(tmp_path / "raw" / "*.csv"))
+    want = spark.read.csv(
+        sorted(paths + [str(tmp_path / "raw" / "_part_hidden.csv")]),
+        sep=";",
+        header=True,
+    )
+    assert sorted(df.collect()) == sorted(want.collect())
+    assert df.filter("a = 'n'").count() == 0
+
+
 def test_empty_glob_is_hard_error(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         build_bronze(spark, str(tmp_path / "nothing" / "*.csv"))
