@@ -1,14 +1,13 @@
-"""Benchmark harness: runs the catalog's headline queries at
+"""Benchmark harness: runs every registered catalog query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE COMPACT JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...top-10...},
- "n": 174, "sf": ...}
+ "n": <number of queries timed>, "sf": ...}
 
-The full 174-entry per-query timing map goes to ``bench_full.json`` next to
-this script — rounds 1-3 printed all of them on the single stdout line,
-which overflowed the driver's tail capture and left every ``BENCH_r*.json``
-with ``"parsed": null``. The final line now stays small enough to parse;
-``queries`` carries only the 10 slowest (the ones worth reading inline).
+The full per-query timing map goes to ``bench_full.json`` next to this
+script; printing it on the single stdout line would overflow a tail
+capture of the output. ``queries`` carries only the 10 slowest (the ones
+worth reading inline).
 
 Each query is forced end-to-end with the noop sink (full execution, no
 driver collect). A warmup run of the flagship amortizes JVM/codegen start-up

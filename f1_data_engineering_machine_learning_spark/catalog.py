@@ -10523,7 +10523,7 @@ def f1_abt_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     df = results_fixture(spark)
-    fs = driver_feature_store(df, _F1_ABT_DATES, mode="single_pass")
+    fs = driver_feature_store(df, _F1_ABT_DATES)
     abt = abt_champions(fs, champions(df), oot_bound=2025)
     spark_types = {"INTEGER": "int", "BIGINT": "bigint", "DOUBLE": "double"}
     tm = abt_type_map()

@@ -11,21 +11,17 @@ Scale design notes (the point of each variant):
 - **MinHash+LSH**: the scale path. Signatures are computed with array
   expressions (JVM, no UDF), banded, and candidates come from a groupBy on
   (band, band-hash) — shuffle volume is O(docs x bands), never O(docs^2).
-- **SimHash**: 64-bit sketch via a vectorized pandas UDF (the one place
-  Python earns its cost: 64 per-bit majority sums are awkward as SQL
-  expressions but trivial in NumPy); candidates from 16-bit chunk equality
-  (Hamming<=3 guarantee via pigeonhole).
+- **SimHash**: 64-bit sketch as 64 per-bit majority sums in one
+  map-side-combinable groupBy (JVM, no UDF); candidates from 16-bit chunk
+  equality (Hamming<=3 guarantee via pigeonhole).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from f1_data_engineering_machine_learning_spark.dataops.text import (
     content_fingerprint,
@@ -490,34 +486,6 @@ def incremental_minhash_dedup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _simhash_udf():
-    """64-bit SimHash from an array of token hashes: per-bit majority vote.
-    Vectorized NumPy over Arrow batches — the sanctioned slow-path shape
-    (never a row-at-a-time Python UDF). Built lazily: pandas_udf needs an
-    active SparkSession to parse its return type."""
-
-    @pandas_udf("long")
-    def simhash_from_hashes(hashes: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = np.zeros(len(hashes), dtype=np.int64)
-        for row_idx, hs in enumerate(hashes):
-            if hs is None or len(hs) == 0:
-                continue
-            arr = np.asarray(hs, dtype=np.int64).view(np.uint64)
-            bits = ((arr[:, None] >> np.arange(64, dtype=np.uint64)) & 1).astype(
-                np.int32
-            )
-            votes = bits.sum(axis=0) * 2 - len(arr)
-            sim = np.uint64(0)
-            for b in np.nonzero(votes > 0)[0]:
-                sim |= np.uint64(1) << np.uint64(b)
-            out[row_idx] = sim.astype(np.int64)
-        return pd.Series(out)
-
-    return simhash_from_hashes
-
-
 #: portable simhash width: 15 hex chars of md5 = 60 bits, the widest
 #: hex-derived value that fits a SIGNED 64-bit int in every engine
 PORTABLE_SIMHASH_BITS = 60
@@ -527,18 +495,11 @@ def simhash(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    impl: str = "jvm",
     portable: bool = False,
 ) -> DataFrame:
-    """(id, simhash). Two implementations producing IDENTICAL sketches
-    (tested):
-
-    - ``impl='jvm'`` (default): explode token hashes to rows, 64 per-bit
-      conditional sums in one map-side-combinable groupBy, bits
-      reassembled with shifts — zero Python in the row path; the form that
-      wins on a cluster.
-    - ``impl='pandas_udf'``: the Arrow-batched NumPy majority vote — kept
-      as the reference shape for sketches that genuinely need Python.
+    """(id, simhash): explode token hashes to rows, 64 per-bit
+    conditional sums in one map-side-combinable groupBy, bits
+    reassembled with shifts — zero Python in the row path.
 
     ``portable=True`` swaps the token hash from xxhash64 (fast,
     engine-specific) to the first 15 hex chars of md5 interpreted as a
@@ -549,15 +510,6 @@ def simhash(
     hash stage — pick per deployment.
     """
     df = ensure_min_parallelism(df)
-    if impl == "pandas_udf":
-        if portable:
-            raise ValueError("portable simhash is jvm-impl only")
-        token_hashes = F.transform(tokens(text_col), lambda t: F.xxhash64(t))
-        return df.select(
-            F.col(id_col).alias("id"),
-            _simhash_udf()(token_hashes).alias("simhash"),
-        )
-
     n_bits = PORTABLE_SIMHASH_BITS if portable else 64
     tok = df.select(F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("t"))
     if portable:

@@ -79,40 +79,6 @@ def _pair_cos_hoisted() -> Column:
     )
 
 
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Dot product unrolled for a KNOWN dimension: a left-to-right chain of
-    ``+`` over ``a[i]*b[i]`` — the SAME accumulation order as the
-    sequential fold in :func:`dot` (so bitwise-identical results), but a
-    plain expression tree instead of a higher-order ``aggregate``, which
-    Spark evaluates interpreted (codegen fallback). On an O(n^2) pair scan
-    this is the difference between whole-stage codegen and per-row lambda
-    dispatch — ~5-10x on the brute-force similarity paths. The explicit
-    leading ``0.0`` reproduces the fold's seed so even the ``-0.0`` edge
-    is bit-identical."""
-    acc = F.lit(0.0) + F.element_at(a, 1).cast("double") * F.element_at(b, 1).cast(
-        "double"
-    )
-    for i in range(2, dim + 1):
-        acc = acc + F.element_at(a, i).cast("double") * F.element_at(b, i).cast(
-            "double"
-        )
-    return acc
-
-
-def l2_norm_fixed(a: Column, dim: int) -> Column:
-    """Unrolled L2 norm; accumulation order matches :func:`l2_norm`.
-
-    Note the fold in :func:`l2_norm` starts at ``0.0 + x1*x1``; adding
-    ``0.0`` to the first square is exact in IEEE double, so dropping the
-    explicit zero term keeps results bitwise identical."""
-    x1 = F.element_at(a, 1).cast("double")
-    acc = x1 * x1
-    for i in range(2, dim + 1):
-        xi = F.element_at(a, i).cast("double")
-        acc = acc + xi * xi
-    return F.sqrt(acc)
-
-
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -128,10 +94,9 @@ def cosine_topk(
     deterministic (similarity desc, neighbor id) ordering.
 
     Pass ``dim`` when the embedding dimension is known: norms are then
-    precomputed ONCE per side (not per pair) and the per-pair dot product
-    unrolls into a codegen-friendly expression chain (:func:`dot_fixed`) —
-    bitwise-identical results, ~an order of magnitude less work on the
-    O(Q x N) scan."""
+    precomputed ONCE per side (not per pair) and each pair costs one
+    array traversal (:func:`_dot_hof_sql`) — bitwise-identical results,
+    a fraction of the work on the O(Q x N) scan."""
     # vectors pre-cast to array<double> once per side so the fixed-dim
     # path's SQL-text expressions (one parse each — the unrolled Column
     # chains cost hundreds of py4j calls per use) need no per-element
@@ -436,38 +401,20 @@ def rp_lsh_topk(
     )
 
 
-def _dot_fixed_sql(a: str, b: str, dim: int) -> str:
-    """SQL text twin of :func:`dot_fixed` over ALREADY-double arrays —
-    the same left-to-right chain (leading 0.0 seed included), so values
-    are bitwise-equal, but the whole expression is ONE parse instead of
-    ~4 py4j round-trips per term (measured: the Column form costs
-    ~seconds of pure driver time when a query builds several unrolled
-    64-dim expressions)."""
-    acc = f"(0.0D + (element_at({a}, 1) * element_at({b}, 1)))"
-    for i in range(2, dim + 1):
-        acc = f"({acc} + (element_at({a}, {i}) * element_at({b}, {i})))"
-    return acc
-
-
 def _dot_hof_sql(a: str, b: str) -> str:
     """The dot product for PAIR-SCAN hot paths: one array traversal via
-    ``aggregate(zip_with(...))``. Bitwise-equal to :func:`_dot_fixed_sql`
-    — the fold is the same left-to-right chain with the same ``0.0`` seed
-    (``((0.0 + t1) + t2) + ...``), so every oracle that replays the
-    unrolled chain still matches exactly (equivalence asserted in
-    ``tests/test_dataops.py``).
+    ``aggregate(zip_with(...))``, the sequential left fold
+    ``((0.0 + t1) + t2) + ...`` in element order that the DuckDB oracles
+    replay (bitwise against a Python fold in ``tests/test_dataops.py``).
 
-    Why this form wins where it sits: a join CONDITION this large never
-    reaches whole-stage codegen (the generated predicate blows the method
-    limit and Spark falls back to the interpreted evaluator), so each of
-    the unrolled chain's ``2*dim`` ``element_at`` nodes pays interpreted
-    dispatch + boxing PER PAIR — measured ~25 us/pair at dim=64. The HOF
-    is also interpreted, but traverses the two arrays once with
-    specialized getters: ~2x faster end-to-end on the SemDeDup pair scan
-    (4.95 s -> 2.48 s at 151k in-cluster pairs, sf0.1). At 100 TB pair
-    density the per-pair constant IS the operator's cost. The unrolled
-    form stays for per-ROW uses (norms, assignment folds the oracle text
-    mirrors) where it is evaluated once per row, not once per pair."""
+    A join condition this large never reaches whole-stage codegen (the
+    generated predicate blows the method limit and Spark falls back to
+    the interpreted evaluator). An unrolled ``element_at`` chain would pay
+    interpreted dispatch + boxing on each of its ``2*dim`` nodes PER PAIR
+    (~25 us/pair at dim=64); the HOF is also interpreted but traverses the
+    two arrays once with specialized getters, about 2x faster on a
+    SemDeDup-sized pair scan. Per-ROW uses (norms) keep the unrolled
+    :func:`_l2_fixed_sql`, evaluated once per row, not once per pair."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         f"0.0D, (acc, x) -> acc + x)"
@@ -475,8 +422,10 @@ def _dot_hof_sql(a: str, b: str) -> str:
 
 
 def _l2_fixed_sql(a: str, dim: int) -> str:
-    """SQL text twin of :func:`l2_norm_fixed` over an already-double
-    array — same accumulation chain, one parse."""
+    """Unrolled L2 norm of an already-double array for a KNOWN dimension,
+    as one SQL expression (one parse). The chain starts at ``x1*x1``;
+    :func:`l2_norm`'s fold adds its ``0.0`` seed to the first square,
+    which is exact, so the two are bitwise-equal."""
     acc = f"(element_at({a}, 1) * element_at({a}, 1))"
     for i in range(2, dim + 1):
         acc = f"({acc} + (element_at({a}, {i}) * element_at({a}, {i})))"
@@ -562,16 +511,15 @@ def _centroid_frame(
     broadcast-joined under the corpus so the argmax fold reads the
     centroids as DATA instead of inlining k x dim literal expression
     nodes into the plan. Plan and codegen size become k-independent: at
-    production SemDeDup scale (k in the tens of thousands) the literal
-    PLAN itself was the bottleneck (round-3 verdict), while a one-row
+    production SemDeDup scale (k in the tens of thousands) a literal
+    centroid array makes the PLAN itself the bottleneck, while a one-row
     broadcast grows only the 16-bytes-per-double payload.
 
-    Built from one tiny driver collect (k rows — the exact collect the
-    literal path already does) into a LocalRelation: zero executor jobs
-    at runtime and no lambda expressions in the centroid lineage, so
-    per-side fresh frames stay trivially cheap and safe to self-join
-    (see the Spark 4.1 DeduplicateRelations note in
-    :func:`semantic_dedup_deterministic`). ``cn`` is the precomputed
+    Built from one tiny driver collect (k rows) into a LocalRelation:
+    zero executor jobs at runtime and no lambda expressions in the
+    centroid lineage, so per-side fresh frames stay trivially cheap and
+    safe to join (see the Spark 4.1 DeduplicateRelations note in
+    :func:`incremental_semantic_dedup`). ``cn`` is the precomputed
     centroid norm — hoisted out of the per-(row x centroid) cosine,
     bitwise-equal to the fold the oracle replays."""
     spark = corpus.sparkSession
@@ -582,21 +530,21 @@ def _centroid_frame(
     return spark.createDataFrame([(cents,)], schema)
 
 
-def _argmax_centroid_expr(vec_expr: str, cent_arr: str) -> str:
-    """Per-row nearest-centroid assignment as a map-only SQL fold over the
-    literal centroid array: strictly-greater keeps the earliest (smallest
-    cid, array is id-ordered) on cosine ties — mirrored by the oracle's
-    ``ORDER BY cos DESC, cid`` ROW_NUMBER."""
-    cos_c = _cos_sql(vec_expr, "c.cv")
-    # zero's cid is BIGINT so the fold type-checks against both centroid
-    # carriers: the literal array (int cids, widened by the CASE) and the
-    # _centroid_frame column (bigint cids) — aggregate() requires the
-    # merge lambda's return type to equal the zero type exactly
-    return (
-        f"aggregate({cent_arr}, "
-        f"named_struct('s', CAST(NULL AS DOUBLE), 'cid', CAST(-1 AS BIGINT)), "
-        f"(acc, c) -> CASE WHEN acc.s IS NULL OR {cos_c} > acc.s "
-        f"THEN named_struct('s', {cos_c}, 'cid', c.cid) ELSE acc END).cid"
+def _argmax_centroid(vec: str, norm: str) -> Column:
+    """Nearest centroid of the vector column ``vec`` (row norm ``norm``)
+    over the joined :func:`_centroid_frame` column ``__cents``: one dot
+    traversal per centroid, cos = dot/(nv*cn) with the centroid norm
+    precomputed. ``array_min`` over struct(negs, cid) is "max cosine,
+    smallest cid on ties" — the oracle's ``ORDER BY cos DESC, cid``
+    ROW_NUMBER. (Zero vectors make cosine NaN; assignment is undefined
+    for them — module docstring.)"""
+    dot_c = (
+        f"aggregate(zip_with({vec}, c.cv, (x, y) -> x * y), "
+        "0.0D, (a, x) -> a + x)"
+    )
+    return F.expr(
+        f"array_min(transform(__cents, c -> named_struct("
+        f"'negs', -({dot_c} / ({norm} * c.cn)), 'cid', c.cid))).cid"
     )
 
 
@@ -638,24 +586,10 @@ def ivf_topk_deterministic(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("__cvec")
     ).withColumn("__cn", l2_norm(F.col("__cvec")))
     # per-row argmax over the broadcast centroid frame (still map-only —
-    # a 1-row broadcast adds no shuffle): the row norm is hoisted to a
-    # column and each centroid's norm comes precomputed from the frame,
-    # so assignment costs ONE dot traversal per centroid instead of the
-    # literal CASE-fold's (dot + both norms) x (test + take). Same
-    # cos = dot/(nv*nc) grouping and same "max cosine, smallest cid"
-    # tie rule (array_min over (negs, cid)) — values bitwise-unchanged,
-    # which the value-hash oracle checks.
-    dot_c = (
-        "aggregate(zip_with(__cvec, c.cv, (x, y) -> x * y), "
-        "0.0D, (a, x) -> a + x)"
-    )
-    argmax = F.expr(
-        f"array_min(transform(__cents, c -> named_struct("
-        f"'negs', -({dot_c} / (__cn * c.cn)), 'cid', c.cid))).cid"
-    )
+    # a 1-row broadcast adds no shuffle)
     assigned = (
         c.join(F.broadcast(_centroid_frame(corpus, id_col, vec_col, n_centroids)))
-        .withColumn("centroid", argmax)
+        .withColumn("centroid", _argmax_centroid("__cvec", "__cn"))
         .drop("__cents")
     )
 
@@ -677,17 +611,10 @@ def ivf_topk_deterministic(
         F.explode(F.expr(probe_expr)).alias("__p"),
     ).select("query_id", "__qvec", "__qn", F.col("__p.cid").alias("centroid"))
 
-    # pair similarity over hoisted per-row norms: one traversal per pair
-    # (cosine() recomputes both norms per pair — 3x the array walks);
-    # dot/(qn*cn) keeps cosine()'s exact grouping, values unchanged
-    pair_sim = F.expr(
-        "CAST(aggregate(zip_with(__qvec, __cvec, (x, y) -> x * y), "
-        "0.0D, (a, x) -> a + x) / (__qn * __cn) AS DOUBLE)"
-    )
     scored = (
         assigned.join(F.broadcast(probes), "centroid")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim", pair_sim)
+        .withColumn("cosine_sim", _pair_cos_hoisted())
         .select("query_id", "neighbor_id", "cosine_sim")
     )
     return topk_per_group(
@@ -1020,8 +947,6 @@ def semantic_dedup_deterministic(
     n_centroids: int = 16,
     max_cluster: int = 100_000,
     dim: int | None = None,
-    assign: str = "join",
-    pair_scan: str = "arrow",
 ) -> DataFrame:
     """SemDeDup (Abbas et al., arXiv:2303.09540): cluster embeddings with
     a coarse quantizer, then inside each cluster drop every vector that
@@ -1030,236 +955,96 @@ def semantic_dedup_deterministic(
     Jaccard / MinHash / SimHash / embedding-pairs / semantic). Returns one
     row per corpus vector: ``(id_col, centroid, kept)``.
 
-    The quantizer is the deterministic sampled one
-    (:func:`_sampled_centroid_literal` — the ``n_centroids`` smallest-id
-    vectors), so a second engine re-derives identical clusters and drop
-    decisions; the KMeans variant would be engine-internal and only
-    rows-checkable. The keep rule is "survivor = no smaller-id near-dup in
-    my cluster" — deterministic and order-free (NOT the greedy sequential
-    scan of the paper, which depends on visit order; on a chain a-b-c
-    where only adjacent pairs exceed the threshold this drops both b and
-    c, the conservative direction for training-data curation).
+    The quantizer is the deterministic sampled one (the ``n_centroids``
+    smallest-id vectors, :func:`_centroid_frame`), so a second engine
+    re-derives identical clusters and drop decisions; the KMeans variant
+    would be engine-internal and only rows-checkable. The keep rule is
+    "survivor = no smaller-id near-dup in my cluster" — deterministic and
+    order-free (NOT the greedy sequential scan of the paper, which depends
+    on visit order; on a chain a-b-c where only adjacent pairs exceed the
+    threshold this drops both b and c, the conservative direction for
+    training-data curation).
 
     Scale shape (the paper's own rationale — clustering makes the O(n^2)
     pair scan local):
-    - assignment is a map-only per-row argmax over the literal centroid
-      array — no shuffle, embarrassingly parallel;
-    - the pair scan self-joins WITHIN a cluster only: one shuffle of
-      (id, vector) rows on the cluster key; per-cluster work is
-      O(m^2) dot products with m ~ n/n_centroids — ``n_centroids``
-      scales with the corpus (SemDeDup uses k ~ n/1000) to bound m;
+    - assignment is a map-only per-row argmax over a ONE-ROW broadcast
+      centroid frame — no shuffle, and plan and codegen size stay
+      k-independent (production SemDeDup runs k ~ n/1000, tens of
+      thousands of centroids);
+    - one shuffle on the cluster key, then a per-cluster Arrow kernel
+      (``applyInPandas``) computes every pairwise cosine with NumPy in
+      the fold's exact accumulation order (:func:`_seq_dot_block` —
+      vectorized across pairs, sequential across elements, so every
+      double is bit-equal to the SQL fold the oracle replays). Each
+      vector crosses the Python boundary ONCE, not once per pair;
+    - per-cluster work is O(m^2) dot products with m ~ n/n_centroids,
+      computed in blocks that bound kernel memory at O(block^2);
     - ``max_cluster`` is the degenerate-cluster guard (same role as the
       LSH ``max_bucket``): clusters above it skip the pair scan entirely
       and keep all members — recall loss, never a blow-up;
-    - per-vector norms are computed once per side, and with ``dim`` the
-      dot product unrolls into whole-stage codegen (:func:`dot_fixed`).
-
-    ``assign`` picks the quantizer-assignment PLAN SHAPE (values are
-    bitwise identical — both run the same sequential fold over the same
-    cid-ordered centroid array, equivalence-tested):
-
-    - ``"join"`` (default): centroids live in a ONE-ROW broadcast frame
-      (:func:`_centroid_frame`) cross-joined under the corpus; the argmax
-      fold reads them as an array COLUMN. Plan and codegen size are
-      k-independent — the shape that survives production SemDeDup
-      (k ~ n/1000, tens of thousands of centroids), where the literal
-      plan's O(k x dim) expression nodes made the PLAN the bottleneck
-      (round-3 verdict). Still map-only: a 1-row broadcast nested-loop
-      join adds no shuffle.
-    - ``"literal"``: the round-3 shape — centroids inlined as one parsed
-      SQL literal array. Kept as the small-k oracle twin (it is the
-      text a second engine replays verbatim) and for plans that must
-      not carry a join.
-
-    ``pair_scan`` picks the IN-CLUSTER pair-scan engine (values bitwise
-    identical, equivalence-pinned in tests):
-
-    - ``"arrow"`` (default since round 13): one assignment lineage, one
-      shuffle on the cluster key, and a per-cluster Arrow kernel
-      (``applyInPandas``) that computes every pairwise cosine with
-      NumPy using the fold's exact accumulation order
-      (:func:`_seq_dot_block` — vectorized across pairs, sequential
-      across elements, so every double is bit-equal to the HOF fold).
-      Each vector crosses the Python boundary ONCE (guide §8: move
-      payloads once, not once per pair); the interpreted-HOF
-      join-condition tier evaluated a ~25 us lambda chain PER PAIR.
-      Blocked matmuls bound kernel memory at O(block^2), and
-      ``max_cluster`` still bounds the group a task holds.
-    - ``"join"``: the round-6 shape — cluster-keyed self-join with the
-      single-traversal HOF dot in the join condition. Kept as the
-      pure-JVM twin (no Python workers) and as the equivalence oracle
-      for the kernel.
+    - with ``dim`` the row norm feeding the assignment is one unrolled
+      SQL expression (:func:`_l2_fixed_sql`) instead of a lambda fold.
     """
-    if assign not in ("join", "literal"):
-        raise ValueError(f"assign must be 'join' or 'literal', got {assign!r}")
-    if pair_scan not in ("arrow", "join"):
-        raise ValueError(f"pair_scan must be 'arrow' or 'join', got {pair_scan!r}")
+    from pyspark.sql import types as T
 
-    # Each pair-scan side derives its OWN assignment subtree with per-side
-    # column names (fresh expression ids). The argmax expression contains
-    # higher-order-function lambdas; self-joining one shared subtree makes
-    # Catalyst's DeduplicateRelations re-alias a plan with lambda
-    # variables, which Spark 4.1 miscompiles
-    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND) — and the same bug bites a
-    # checkpointed relation joined to itself, since both branches then
-    # share attribute ids. Distinct lineages sidestep the rewrite (for
-    # the join path this includes a FRESH tiny centroid frame per side);
-    # the recompute is map-only and free of extra shuffles. In the
-    # literal path the k x dim centroid expression is PARSED once
-    # (F.expr here) and the parsed Column reused across the three
-    # subtrees — parsing a multi-kilobyte SQL string per side was the
-    # dominant driver-side plan cost.
-    if assign == "literal":
-        cent_arr = _sampled_centroid_literal(corpus, id_col, vec_col, n_centroids)
-        argmax_col = F.expr(_argmax_centroid_expr("__v", cent_arr))
-    else:
-        # argmax over the joined centroid COLUMN, one compact parsed
-        # expression (no k-dependent text, no py4j storm): the per-row
-        # vector norm __nv is computed once, each centroid's norm comes
-        # precomputed from the frame, and each cosine evaluates exactly
-        # once inside the transform (the CASE-fold form evaluates it
-        # twice: test + take). array_min over struct(negs, cid) ==
-        # "max cosine, smallest cid on ties" — the same tie rule as the
-        # literal fold's strictly-greater-keeps-earliest over the
-        # cid-ascending array. (Zero vectors make cosine NaN; assignment
-        # is undefined for them in BOTH paths — NaN never wins a
-        # comparison.) The division/product shape dot/(nv*cn) is the
-        # literal path's _cos_sql shape over bitwise-equal inputs, so
-        # assignments agree bitwise (equivalence-tested).
-        dot_c = (
-            "aggregate(zip_with(__v, c.cv, (x, y) -> x * y), "
-            "0.0D, (a, x) -> a + x)"
-        )
-        argmax_col = F.expr(
-            f"array_min(transform(__cents, c -> named_struct("
-            f"'negs', -({dot_c} / (__nv * c.cn)), 'cid', c.cid))).cid"
-        )
-        cents_row = _centroid_frame(corpus, id_col, vec_col, n_centroids)
-
-    # fixed-dim norms as SQL text (one parse) instead of unrolled Column
-    # chains (~200 py4j calls each x 6 uses — was the dominant
-    # DataFrame-construction cost); __v is already array<double>, so the
-    # Column form's per-element no-op casts are droppable bitwise
-    norm_sql = _l2_fixed_sql("__v", dim) if dim is not None else None
-
-    def _assigned(tag: str) -> DataFrame:
-        out = corpus.select(
+    nv = F.expr(_l2_fixed_sql("__v", dim)) if dim is not None else l2_norm(F.col("__v"))
+    full = (
+        corpus.select(
             F.col(id_col).alias("__id"),
             _as_double(F.col(vec_col)).alias("__v"),
         )
-        if assign == "join":
-            nv = F.expr(norm_sql) if dim is not None else l2_norm(F.col("__v"))
-            out = (
-                out.withColumn("__nv", nv)
-                .join(F.broadcast(cents_row))
-                .withColumn("__c", argmax_col)
-                .drop("__cents", "__nv")
+        .withColumn("__nv", nv)
+        .join(F.broadcast(_centroid_frame(corpus, id_col, vec_col, n_centroids)))
+        .withColumn("__c", _argmax_centroid("__v", "__nv"))
+        .drop("__cents", "__nv")
+    )
+    thr = float(threshold)
+    mc = int(max_cluster)
+    out_schema = T.StructType(
+        [
+            T.StructField(id_col, corpus.schema[id_col].dataType),
+            T.StructField("centroid", T.IntegerType()),
+            T.StructField("kept", T.BooleanType()),
+        ]
+    )
+
+    def _kern(pdf: pd.DataFrame) -> pd.DataFrame:
+        m = len(pdf)
+        cent = int(pdf["__c"].iloc[0])
+        pdf = pdf.sort_values("__id", kind="mergesort")
+        ids = pdf["__id"].to_numpy()
+        kept = np.ones(m, dtype=bool)
+        # clusters above max_cluster skip the pair scan (keep all)
+        if 1 < m <= mc:
+            V = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf["__v"]]
             )
-        else:
-            out = out.withColumn("__c", argmax_col)
-        if dim is not None:
-            out = out.withColumn("__n", F.expr(norm_sql))
-        if tag:
-            out = out.select(*[F.col(c).alias(f"{c}{tag}") for c in out.columns])
-        return out
-
-    if pair_scan == "arrow":
-        from pyspark.sql import types as T
-
-        full = _assigned("")
-        thr = float(threshold)
-        mc = int(max_cluster)
-        out_schema = T.StructType(
-            [
-                T.StructField(id_col, corpus.schema[id_col].dataType),
-                T.StructField("centroid", T.IntegerType()),
-                T.StructField("kept", T.BooleanType()),
-            ]
+            nrm = _seq_norms(V)
+            blk = 2048  # bounds kernel memory at O(blk^2) doubles
+            dropped = np.zeros(m, dtype=bool)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                for j0 in range(1, m, blk):
+                    j1 = min(j0 + blk, m)
+                    jj = np.arange(j0, j1)[None, :]
+                    for i0 in range(0, j1, blk):
+                        i1 = min(i0 + blk, j1)
+                        sim = _seq_dot_block(V[i0:i1], V[j0:j1]) / (
+                            nrm[i0:i1, None] * nrm[None, j0:j1]
+                        )
+                        ii = np.arange(i0, i1)[:, None]
+                        dropped[j0:j1] |= (
+                            (sim >= thr) & (ii < jj)
+                        ).any(axis=0)
+            kept = ~dropped
+        return pd.DataFrame(
+            {
+                id_col: ids,
+                "centroid": np.full(m, cent, dtype=np.int32),
+                "kept": kept,
+            }
         )
 
-        def _kern(pdf: pd.DataFrame) -> pd.DataFrame:
-            m = len(pdf)
-            cent = int(pdf["__c"].iloc[0])
-            pdf = pdf.sort_values("__id", kind="mergesort")
-            ids = pdf["__id"].to_numpy()
-            kept = np.ones(m, dtype=bool)
-            # clusters above max_cluster skip the pair scan (keep all) —
-            # the same degenerate-cluster guard as the join path
-            if 1 < m <= mc:
-                V = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["__v"]]
-                )
-                nrm = _seq_norms(V)
-                blk = 2048  # bounds kernel memory at O(blk^2) doubles
-                dropped = np.zeros(m, dtype=bool)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    for j0 in range(1, m, blk):
-                        j1 = min(j0 + blk, m)
-                        jj = np.arange(j0, j1)[None, :]
-                        for i0 in range(0, j1, blk):
-                            i1 = min(i0 + blk, j1)
-                            sim = _seq_dot_block(V[i0:i1], V[j0:j1]) / (
-                                nrm[i0:i1, None] * nrm[None, j0:j1]
-                            )
-                            ii = np.arange(i0, i1)[:, None]
-                            dropped[j0:j1] |= (
-                                (sim >= thr) & (ii < jj)
-                            ).any(axis=0)
-                kept = ~dropped
-            return pd.DataFrame(
-                {
-                    id_col: ids,
-                    "centroid": np.full(m, cent, dtype=np.int32),
-                    "kept": kept,
-                }
-            )
-
-        # the kernel recomputes norms vectorized (bitwise-equal), so the
-        # hoisted __n column would be dead weight across the boundary —
-        # Catalyst prunes its computation once unreferenced
-        return full.drop("__n").groupBy("__c").applyInPandas(
-            _kern, schema=out_schema
-        )
-
-    a, b, full = _assigned("a"), _assigned("b"), _assigned("")
-    # max_cluster guard as a count-window on the pair scan's OWN join
-    # key: the window's cluster-keyed exchange is the very exchange the
-    # a-b join needs, so the guard costs zero extra shuffles (vs the
-    # previous sizes-agg + two broadcast joins over a third assignment
-    # lineage). Filtering the a side alone suffices — the join is inner
-    # on cluster, so a removed cluster produces no pairs regardless of
-    # the b side. Semantics unchanged: __csz counts the FULL corpus
-    # rows of the cluster (a IS the full corpus, assigned).
-    from pyspark.sql import Window
-
-    wc = Window.partitionBy("__ca")
-    a = (
-        a.withColumn("__csz", F.count(F.lit(1)).over(wc))
-        .filter(F.col("__csz") <= max_cluster)
-        .drop("__csz")
-    )
-    if dim is not None:
-        sim = F.expr(
-            f"CAST({_dot_hof_sql('__va', '__vb')}"
-            f" / (__na * __nb) AS DOUBLE)"
-        )
-    else:
-        sim = cosine(F.col("__va"), F.col("__vb"))
-    # threshold inside the join condition AFTER id<id (same short-circuit
-    # rationale as embedding_cosine_dup_pairs): the dot never evaluates
-    # for the >= half of each cluster's pair block
-    dropped = (
-        a.join(b, F.col("__ca") == F.col("__cb"))
-        .filter((F.col("__ida") < F.col("__idb")) & (sim >= threshold))
-        .select(F.col("__idb").alias("__id"))
-        .distinct()
-        .withColumn("__dropped", F.lit(True))
-    )
-    return full.join(dropped, "__id", "left").select(
-        F.col("__id").alias(id_col),
-        F.col("__c").cast("int").alias("centroid"),
-        F.col("__dropped").isNull().alias("kept"),
-    )
+    return full.groupBy("__c").applyInPandas(_kern, schema=out_schema)
 
 
 def quantize_embeddings(
@@ -1449,21 +1234,18 @@ def l2_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Exact top-k by squared L2 distance (ascending) — the baseline PQ's
     ADC scan is graded against. Same broadcast-queries shape as
     :func:`cosine_topk`; ties break by neighbor id.
 
-    ``engine="arrow"`` (default since round 13) scores the broadcast-
-    joined pairs in a ``mapInPandas`` kernel: one NumPy pass per batch
-    with the fold's exact accumulation order (sequential across
-    elements, vectorized across pairs — bitwise-equal to :func:`l2sq`,
-    see :func:`_seq_dot_block`), replacing the interpreted per-pair HOF
-    lambda. ``engine="sql"`` keeps the pure-JVM fold (the equivalence
-    twin). The join/top-k shape is identical in both."""
-    if engine not in ("arrow", "sql"):
-        raise ValueError(f"engine must be 'arrow' or 'sql', got {engine!r}")
+    The broadcast-joined pairs are scored in a ``mapInPandas`` kernel: one
+    NumPy pass per batch with the fold's exact accumulation order
+    (sequential across elements, vectorized across pairs — bitwise-equal
+    to :func:`l2sq`, see :func:`_seq_dot_block`) instead of an
+    interpreted per-pair HOF lambda."""
+    from pyspark.sql import types as T
+
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("__qvec")
     )
@@ -1473,46 +1255,35 @@ def l2_topk(
         )
     )
     pairs = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-    if engine == "arrow":
-        from pyspark.sql import types as T
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", queries.schema[id_col].dataType),
+            T.StructField("neighbor_id", corpus.schema[id_col].dataType),
+            T.StructField("l2_dist", T.DoubleType()),
+        ]
+    )
 
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[id_col].dataType),
-                T.StructField("neighbor_id", corpus.schema[id_col].dataType),
-                T.StructField("l2_dist", T.DoubleType()),
-            ]
-        )
+    def _score(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            Q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["__qvec"]])
+            C = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["__cvec"]])
+            acc = np.zeros(len(pdf))
+            for d in range(Q.shape[1]):
+                t = Q[:, d] - C[:, d]
+                acc += t * t
+            yield pd.DataFrame(
+                {
+                    "query_id": pdf["query_id"],
+                    "neighbor_id": pdf["neighbor_id"],
+                    "l2_dist": acc,
+                }
+            )
 
-        def _score(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                Q = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["__qvec"]]
-                )
-                C = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["__cvec"]]
-                )
-                acc = np.zeros(len(pdf))
-                for d in range(Q.shape[1]):
-                    t = Q[:, d] - C[:, d]
-                    acc += t * t
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"],
-                        "neighbor_id": pdf["neighbor_id"],
-                        "l2_dist": acc,
-                    }
-                )
-
-        scored = pairs.select(
-            "query_id", "neighbor_id", "__qvec", "__cvec"
-        ).mapInPandas(_score, schema=out_schema)
-    else:
-        scored = pairs.withColumn(
-            "l2_dist", l2sq(F.col("__qvec"), F.col("__cvec")).cast("double")
-        ).select("query_id", "neighbor_id", "l2_dist")
+    scored = pairs.select(
+        "query_id", "neighbor_id", "__qvec", "__cvec"
+    ).mapInPandas(_score, schema=out_schema)
     return topk_per_group(
         scored, ["query_id"], [F.col("l2_dist"), F.col("neighbor_id")], k, rn_col="rank"
     )
@@ -1568,73 +1339,50 @@ def pq_encode_deterministic(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Encode every corpus vector to ``m`` one-byte codes: per subspace,
-    the argmin-squared-L2 codeword (ties -> smallest code, strict ``<``
-    keeps the earliest of the code-ordered array). Map-only — zero
-    shuffles: encoding streams a 100 TB corpus at scan speed and the
+    the argmin-squared-L2 codeword (ties -> smallest code). Map-only —
+    zero shuffles: encoding streams a 100 TB corpus at scan speed and the
     stored index is |corpus| x (id + m bytes) — with m=8 over dim=64
     doubles that is a 64x payload compression before any search work
     happens. Returns (neighbor_id, __codes array<int>).
 
-    ``engine="arrow"`` (default since round 13) assigns codes in a
-    vectorized pandas-UDF kernel: per (subspace, codeword) the distances
-    accumulate sequentially across elements (one rounded subtract /
-    multiply / add per term — bitwise the ``_l2sq_sql`` fold, see
-    :func:`_seq_dot_block`), and ``np.argmin``'s first-minimum matches
-    the struct-min's smallest-code tie rule. The interpreted HOF tier
-    paid ~m x ksub x dsub lambda steps PER ROW (the dominant cost of the
-    PQ index build, r12 decomposition: 1.0 s of embedding_pq_topk's
-    3.3 s floor). ``engine="sql"`` keeps the pure-JVM literal-fold twin
-    (the text the DuckDB oracle replays; equivalence-pinned)."""
-    if engine not in ("arrow", "sql"):
-        raise ValueError(f"engine must be 'arrow' or 'sql', got {engine!r}")
+    Codes are assigned in a vectorized pandas-UDF kernel: per (subspace,
+    codeword) the distances accumulate sequentially across elements (one
+    rounded subtract / multiply / add per term — bitwise the
+    ``_l2sq_sql`` fold the DuckDB oracle replays, see
+    :func:`_seq_dot_block`), and ``np.argmin``'s first minimum is the
+    smallest-code tie rule. An interpreted HOF fold would pay
+    ~m x ksub x dsub lambda steps PER ROW, the dominant cost of the PQ
+    index build."""
+    from pyspark.sql.types import ArrayType, IntegerType
+
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("__cvec")
     )
-    if engine == "arrow":
-        from pyspark.sql.types import ArrayType, IntegerType
+    cb = [[list(map(float, cw)) for cw in book] for book in codebooks]
 
-        cb = [[list(map(float, cw)) for cw in book] for book in codebooks]
+    @F.pandas_udf(ArrayType(IntegerType()))
+    def _codes(vs: pd.Series) -> pd.Series:
+        if len(vs) == 0:
+            return pd.Series([], dtype=object)
+        V = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+        out = np.empty((len(V), m), dtype=np.int32)
+        for j in range(m):
+            base = j * dsub
+            dists = np.empty((len(V), len(cb[j])))
+            for code, cw in enumerate(cb[j]):
+                acc = np.zeros(len(V))
+                for d in range(dsub):
+                    t = V[:, base + d] - cw[d]
+                    acc += t * t
+                dists[:, code] = acc
+            out[:, j] = np.argmin(dists, axis=1)
+        return pd.Series([row.tolist() for row in out])
 
-        @F.pandas_udf(ArrayType(IntegerType()))
-        def _codes(vs: pd.Series) -> pd.Series:
-            if len(vs) == 0:
-                return pd.Series([], dtype=object)
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-            out = np.empty((len(V), m), dtype=np.int32)
-            for j in range(m):
-                base = j * dsub
-                dists = np.empty((len(V), len(cb[j])))
-                for code, cw in enumerate(cb[j]):
-                    acc = np.zeros(len(V))
-                    for d in range(dsub):
-                        t = V[:, base + d] - cw[d]
-                        acc += t * t
-                    dists[:, code] = acc
-                out[:, j] = np.argmin(dists, axis=1)
-            return pd.Series([row.tolist() for row in out])
-
-        return c.select("neighbor_id", _codes(F.col("__cvec")).alias("__codes"))
-    code_exprs = []
-    for j in range(m):
-        sub = f"slice(__cvec, {j * dsub + 1}, {dsub})"
-        d = _l2sq_sql(sub, "e.cv")
-        # array_min over (dist, code) structs == the CASE-fold's
-        # "strict < keeps the earliest code" (min dist, then smallest
-        # code on exact ties), but evaluates each codeword's distance
-        # ONCE instead of twice (test + take) — the same swap the
-        # centroid argmax got. Squared-L2 is NaN-free on real inputs,
-        # so struct ordering has no NaN edge here.
-        code_exprs.append(
-            f"array_min(transform({_pq_cb_sql(codebooks, j)}, "
-            f"e -> named_struct('s', {d}, 'code', e.code))).code"
-        )
-    codes = F.array(*[F.expr(e) for e in code_exprs]).alias("__codes")
-    return c.select("neighbor_id", codes)
+    return c.select("neighbor_id", _codes(F.col("__cvec")).alias("__codes"))
 
 
 def pq_topk_deterministic(
@@ -1647,7 +1395,6 @@ def pq_topk_deterministic(
     ksub: int = 16,
     dim: int = 64,
     rerank: int | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """PQ-ADC top-k: asymmetric distance computation over the compressed
     corpus — the third ANN family next to IVF (partition pruning) and
@@ -1686,7 +1433,7 @@ def pq_topk_deterministic(
     ``embedding_pq_topk``). Ties: (adc_dist asc, neighbor_id)."""
     codebooks = pq_codebooks_deterministic(corpus, id_col, vec_col, m, ksub, dim)
     dsub = dim // m
-    enc = pq_encode_deterministic(corpus, codebooks, id_col, vec_col, engine=engine)
+    enc = pq_encode_deterministic(corpus, codebooks, id_col, vec_col)
 
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("__qvec")
@@ -1867,7 +1614,6 @@ def incremental_semantic_dedup(
     n_centroids: int = 16,
     max_cluster: int = 100_000,
     dim: int | None = None,
-    pair_scan: str = "arrow",
 ) -> DataFrame:
     """Continuous-ingest SemDeDup: flag NEW batch vectors that are
     semantic near-duplicates of an EXISTING corpus — the incremental
@@ -1893,135 +1639,87 @@ def incremental_semantic_dedup(
     keep-all, same direction as the full pass). Assignment itself is
     map-only (1-row broadcast centroid frame, k-independent plan).
 
-    ``pair_scan="arrow"`` (default since round 13) runs the batch x
-    corpus scan as a per-cluster COGROUPED Arrow kernel — each side's
-    vectors cross the Python boundary once and the pairwise cosines
-    (including the emitted ``cosine_sim`` doubles) are computed with
-    the fold's exact accumulation order (:func:`_seq_dot_block`),
-    bitwise-equal to the HOF join condition (``pair_scan="join"``, the
-    pure-JVM twin kept for equivalence tests)."""
-    if pair_scan not in ("arrow", "join"):
-        raise ValueError(
-            f"pair_scan must be 'arrow' or 'join', got {pair_scan!r}"
-        )
-    wanted = ("__id", "__v", "__nv", "__c")
+    The batch x corpus scan is a per-cluster COGROUPED Arrow kernel:
+    each side's vectors cross the Python boundary once and the pairwise
+    cosines (including the emitted ``cosine_sim`` doubles) are computed
+    in the fold's exact accumulation order (:func:`_seq_dot_block`)."""
+    from pyspark.sql import types as T
 
-    def _assigned(df: DataFrame, tag: str) -> DataFrame:
-        out = df.select(
-            F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__v")
-        )
+    def _assigned(df: DataFrame) -> DataFrame:
         nv = (
             F.expr(_l2_fixed_sql("__v", dim))
             if dim is not None
             else l2_norm(F.col("__v"))
         )
-        dot_c = (
-            "aggregate(zip_with(__v, c.cv, (x, y) -> x * y), "
-            "0.0D, (a, x) -> a + x)"
-        )
-        argmax = F.expr(
-            f"array_min(transform(__cents, c -> named_struct("
-            f"'negs', -({dot_c} / (__nv * c.cn)), 'cid', c.cid))).cid"
-        )
-        # fresh centroid frame per side: self-join-safe lineages (the
-        # Spark 4.1 DeduplicateRelations lambda re-alias bug — see
-        # semantic_dedup_deterministic)
-        out = (
-            out.withColumn("__nv", nv)
-            .join(F.broadcast(_centroid_frame(corpus, id_col, vec_col, n_centroids)))
-            .withColumn("__c", argmax)
-            .select(*wanted)
-        )
-        return out.select(*[F.col(c).alias(f"{c}{tag}") for c in out.columns])
-
-    if pair_scan == "arrow":
-        from pyspark.sql import types as T
-
-        thr = float(threshold)
-        mc = int(max_cluster)
-        id_t = batch.schema[id_col].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("batch_id", id_t),
-                T.StructField("corpus_id", corpus.schema[id_col].dataType),
-                T.StructField("centroid", T.IntegerType()),
-                T.StructField("cosine_sim", T.DoubleType()),
-            ]
-        )
-
-        def _kern(bp: pd.DataFrame, cp: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"batch_id": [], "corpus_id": [], "centroid": [], "cosine_sim": []}
-            )
-            # corpus-side degenerate-cluster guard, same rule as the
-            # join path's window-count filter
-            if len(bp) == 0 or len(cp) == 0 or len(cp) > mc:
-                return empty
-            cent = int(bp["__c"].iloc[0])
-            Vb = np.stack([np.asarray(v, dtype=np.float64) for v in bp["__v"]])
-            Vc = np.stack([np.asarray(v, dtype=np.float64) for v in cp["__v"]])
-            nb, nc = _seq_norms(Vb), _seq_norms(Vc)
-            bids = bp["__id"].to_numpy()
-            cids = cp["__id"].to_numpy()
-            outs = []
-            blk = 2048
-            with np.errstate(invalid="ignore", divide="ignore"):
-                for i0 in range(0, len(Vb), blk):
-                    i1 = min(i0 + blk, len(Vb))
-                    for j0 in range(0, len(Vc), blk):
-                        j1 = min(j0 + blk, len(Vc))
-                        sim = _seq_dot_block(Vb[i0:i1], Vc[j0:j1]) / (
-                            nb[i0:i1, None] * nc[None, j0:j1]
-                        )
-                        hit = sim >= thr
-                        if hit.any():
-                            ii, jj = np.nonzero(hit)
-                            outs.append(
-                                pd.DataFrame(
-                                    {
-                                        "batch_id": bids[i0 + ii],
-                                        "corpus_id": cids[j0 + jj],
-                                        "centroid": np.full(
-                                            len(ii), cent, dtype=np.int32
-                                        ),
-                                        "cosine_sim": sim[ii, jj],
-                                    }
-                                )
-                            )
-            return pd.concat(outs) if outs else empty
-
-        bg = _assigned(batch, "").drop("__nv")
-        cg = _assigned(corpus, "").drop("__nv")
+        # a fresh centroid frame per side: both sides carry the argmax's
+        # lambda variables, and Catalyst's DeduplicateRelations re-alias
+        # of one shared subtree under them hits a Spark 4.1 bug
+        # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND); a distinct, job-free
+        # LocalRelation per side sidesteps the rewrite
         return (
-            bg.groupBy("__c")
-            .cogroup(cg.groupBy("__c"))
-            .applyInPandas(_kern, schema=out_schema)
+            df.select(
+                F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__v")
+            )
+            .withColumn("__nv", nv)
+            .join(F.broadcast(_centroid_frame(corpus, id_col, vec_col, n_centroids)))
+            .withColumn("__c", _argmax_centroid("__v", "__nv"))
+            .select("__id", "__v", "__c")
         )
 
-    from pyspark.sql import Window
-
-    b, c = _assigned(batch, "b"), _assigned(corpus, "c")
-    wc = Window.partitionBy("__cc")
-    c = (
-        c.withColumn("__csz", F.count(F.lit(1)).over(wc))
-        .filter(F.col("__csz") <= max_cluster)
-        .drop("__csz")
+    thr = float(threshold)
+    mc = int(max_cluster)
+    out_schema = T.StructType(
+        [
+            T.StructField("batch_id", batch.schema[id_col].dataType),
+            T.StructField("corpus_id", corpus.schema[id_col].dataType),
+            T.StructField("centroid", T.IntegerType()),
+            T.StructField("cosine_sim", T.DoubleType()),
+        ]
     )
-    if dim is not None:
-        sim = F.expr(
-            f"CAST({_dot_hof_sql('__vb', '__vc')}"
-            f" / (__nvb * __nvc) AS DOUBLE)"
+
+    def _kern(bp: pd.DataFrame, cp: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame(
+            {"batch_id": [], "corpus_id": [], "centroid": [], "cosine_sim": []}
         )
-    else:
-        sim = cosine(F.col("__vb"), F.col("__vc"))
+        # corpus-side degenerate-cluster guard
+        if len(bp) == 0 or len(cp) == 0 or len(cp) > mc:
+            return empty
+        cent = int(bp["__c"].iloc[0])
+        Vb = np.stack([np.asarray(v, dtype=np.float64) for v in bp["__v"]])
+        Vc = np.stack([np.asarray(v, dtype=np.float64) for v in cp["__v"]])
+        nb, nc = _seq_norms(Vb), _seq_norms(Vc)
+        bids = bp["__id"].to_numpy()
+        cids = cp["__id"].to_numpy()
+        outs = []
+        blk = 2048
+        with np.errstate(invalid="ignore", divide="ignore"):
+            for i0 in range(0, len(Vb), blk):
+                i1 = min(i0 + blk, len(Vb))
+                for j0 in range(0, len(Vc), blk):
+                    j1 = min(j0 + blk, len(Vc))
+                    sim = _seq_dot_block(Vb[i0:i1], Vc[j0:j1]) / (
+                        nb[i0:i1, None] * nc[None, j0:j1]
+                    )
+                    hit = sim >= thr
+                    if hit.any():
+                        ii, jj = np.nonzero(hit)
+                        outs.append(
+                            pd.DataFrame(
+                                {
+                                    "batch_id": bids[i0 + ii],
+                                    "corpus_id": cids[j0 + jj],
+                                    "centroid": np.full(
+                                        len(ii), cent, dtype=np.int32
+                                    ),
+                                    "cosine_sim": sim[ii, jj],
+                                }
+                            )
+                        )
+        return pd.concat(outs) if outs else empty
+
     return (
-        b.join(c, F.col("__cb") == F.col("__cc"))
-        .withColumn("__sim", sim)
-        .filter(F.col("__sim") >= threshold)
-        .select(
-            F.col("__idb").alias("batch_id"),
-            F.col("__idc").alias("corpus_id"),
-            F.col("__cb").cast("int").alias("centroid"),
-            F.col("__sim").alias("cosine_sim"),
-        )
+        _assigned(batch)
+        .groupBy("__c")
+        .cogroup(_assigned(corpus).groupBy("__c"))
+        .applyInPandas(_kern, schema=out_schema)
     )

@@ -188,14 +188,6 @@ def shingles(col: Column | str, k: int = 3) -> Column:
     return F.flatten(F.transform(F.array(toks), _per_tokens))
 
 
-def min_shingle_fingerprint(col: Column | str, k: int = 3) -> Column:
-    """Deterministic document sketch: lexicographic min of the shingle MD5s
-    (a 1-hash MinHash — the building block the full MinHash generalizes)."""
-    return F.array_min(
-        F.transform(shingles(col, k), lambda s: F.md5(s.cast("binary")))
-    )
-
-
 URL_PATTERN = r"https?://\S+"
 EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 

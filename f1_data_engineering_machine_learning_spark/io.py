@@ -152,14 +152,6 @@ def load_testdata(
     }
 
 
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view of the same name."""
-    dfs = load_testdata(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 def write_table_overwrite(
     df: DataFrame,
     path: str,

@@ -24,7 +24,6 @@ from f1_data_engineering_machine_learning_spark.operators.joins import (  # noqa
 )
 from f1_data_engineering_machine_learning_spark.operators.windows import (  # noqa: F401
     dedup_keep_last,
-    running_agg,
     top1_per_group,
     topk,
 )

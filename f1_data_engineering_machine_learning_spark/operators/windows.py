@@ -232,25 +232,6 @@ def range_partitioned_rank(
     return out.drop("__pid", "__lo", "__hi", "__n", "__cnt")
 
 
-def running_agg(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[str | Column],
-    value: Column,
-    out_col: str,
-) -> DataFrame:
-    """Cumulative aggregate over an ordered frame (rowsBetween unbounded
-    preceding .. current). No reference counterpart (the reference's
-    'rolling' features are re-aggregation per snapshot, SURVEY §2.5) —
-    provided as the window-native alternative."""
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(*_cols(order_by))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(out_col, F.sum(value).over(w))
-
-
 def topk_per_group_salted(
     df: DataFrame,
     partition_by: Sequence[str],

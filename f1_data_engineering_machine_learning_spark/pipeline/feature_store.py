@@ -15,10 +15,10 @@ Column names match the reference byte-for-byte — including its
 ``avgPositioCurrentTemp`` typo (line 100), which downstream ML consumes as a
 feature name and therefore IS the contract.
 
-Modes: ``driver_feature_snapshot`` (one date — the reference's unit of
-work), ``driver_feature_store`` (many dates: 'loop' = reference-compatible
-job-per-date; 'single_pass' = the running-window engine; identical output,
-tested).
+Entry points: ``driver_feature_snapshot`` (one date — the reference's unit
+of work, which ``IncrementalIngestor`` materializes date by date) and
+``driver_feature_store`` (many dates in one pass of the running-window
+engine; tested equal to the per-date snapshots unioned).
 """
 
 from __future__ import annotations
@@ -39,7 +39,6 @@ from f1_data_engineering_machine_learning_spark.plans.snapshot import (
     scoped_count,
     scoped_median,
     scoped_sum,
-    snapshot_loop,
     snapshot_one,
     snapshot_single_pass,
     trailing,
@@ -229,17 +228,8 @@ def driver_feature_snapshot(results: DataFrame, date: str) -> DataFrame:
     return _attach_round(snapshot_one(typed, _spec(), date), typed)
 
 
-def driver_feature_store(
-    results: DataFrame, dates: Sequence[str], mode: str = "single_pass"
-) -> DataFrame:
-    """All snapshot dates. ``mode='loop'`` mirrors the reference's
-    job-per-date; ``mode='single_pass'`` computes every snapshot in one
-    pass of per-entity running windows (plans/snapshot.py)."""
+def driver_feature_store(results: DataFrame, dates: Sequence[str]) -> DataFrame:
+    """All snapshot dates in one pass of per-entity running windows
+    (plans/snapshot.py)."""
     typed = typed_results(results)
-    if mode == "loop":
-        fs = snapshot_loop(typed, _spec(), dates)
-    elif mode == "single_pass":
-        fs = snapshot_single_pass(typed, _spec(), dates)
-    else:
-        raise ValueError(f"unknown mode: {mode!r}")
-    return _attach_round(fs, typed)
+    return _attach_round(snapshot_single_pass(typed, _spec(), dates), typed)

@@ -32,7 +32,6 @@ from f1_data_engineering_machine_learning_spark.pipeline.viz import (
     score_history,
     top_entities_at,
 )
-from f1_data_engineering_machine_learning_spark.plans import IncrementalIngestor
 
 
 def run_pipeline(
@@ -40,14 +39,13 @@ def run_pipeline(
     workdir: str,
     results=None,
     oot_year: int = 2023,
-    mode: str = "single_pass",
-    incremental: bool = False,
 ) -> dict:
     """Bronze -> champions -> feature store -> ABT -> model -> viz frames.
 
-    ``incremental=True`` materializes the feature store through the
-    IncrementalIngestor (per-date slice overwrite, the reference's
-    mechanism); otherwise the single-pass engine computes it in one job."""
+    The feature store is computed for every event date in one pass of the
+    running-window engine. The reference's per-date slice overwrite is
+    ``IncrementalIngestor`` over ``driver_feature_snapshot``, which tops
+    up an existing store one date at a time."""
     results = results if results is not None else results_fixture(spark)
     results.createOrReplaceTempView("results")
 
@@ -55,24 +53,9 @@ def run_pipeline(
     champ.write.mode("overwrite").parquet(f"{workdir}/champions")
 
     dates = event_dates(results)
-    if incremental:
-        from f1_data_engineering_machine_learning_spark.pipeline import (
-            driver_feature_snapshot,
-        )
-
-        ing = IncrementalIngestor(
-            lambda d: driver_feature_snapshot(results, d),
-            f"{workdir}/feature_store_drivers",
-        )
-        ing.exec(dates)
-        # dtYear/dtRef were partition columns; restore dtYear's int type
-        fs = ing.read().withColumn(
-            "dtYear", F.year(F.col("dtRef").cast("date"))
-        )
-    else:
-        fs = driver_feature_store(results, dates, mode=mode)
-        fs.write.mode("overwrite").parquet(f"{workdir}/feature_store_drivers")
-        fs = spark.read.parquet(f"{workdir}/feature_store_drivers")
+    fs = driver_feature_store(results, dates)
+    fs.write.mode("overwrite").parquet(f"{workdir}/feature_store_drivers")
+    fs = spark.read.parquet(f"{workdir}/feature_store_drivers")
 
     abt = abt_champions(fs, spark.read.parquet(f"{workdir}/champions"), oot_year + 1)
     abt.write.mode("overwrite").parquet(f"{workdir}/abt_champions")

@@ -10,12 +10,12 @@ trailing interval, or current period) and each aggregate an ``Agg``
 (aggregate function plus its fact-side input column). Both execution paths
 derive from that one definition:
 
-- ``snapshot_one`` / ``snapshot_loop`` — the reference-compatible path: one
-  aggregation per reference date over ``fact_date <= dtRef``, each scope a
-  ``CASE WHEN`` restriction of its aggregate's input. ``IncrementalIngestor``
+- ``snapshot_one`` — the reference's unit of work: one aggregation for one
+  reference date over ``fact_date <= dtRef``, each scope a ``CASE WHEN``
+  restriction of its aggregate's input. ``IncrementalIngestor``
   materializes it date by date.
 
-- ``snapshot_single_pass`` — the scale path, a per-entity running-window
+- ``snapshot_single_pass`` — every date at once, a per-entity running-window
   engine. The facts are unioned with one marker row per (entity, snapshot
   date) inside the entity's active span, then every aggregate is evaluated
   as a window over the entity's rows ordered by date:
@@ -48,8 +48,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from f1_data_engineering_machine_learning_spark.operators.reshape import union_all
 
 #: name of the snapshot reference-date column in every output
 DT_REF = "dtRef"
@@ -279,21 +277,11 @@ def snapshot_one(facts: DataFrame, spec: SnapshotSpec, date: str) -> DataFrame:
     return _finish(out, spec)
 
 
-def snapshot_loop(
-    facts: DataFrame, spec: SnapshotSpec, dates: Sequence[str]
-) -> DataFrame:
-    """Reference-compatible mode: one aggregation per date, unioned.
-    (The reference writes each date's slice via replaceWhere —
-    /root/reference/scripts/spark_ops.py:189-191; IncrementalIngestor does
-    that part.)"""
-    return union_all([snapshot_one(facts, spec, d) for d in dates])
-
-
 def snapshot_single_pass(
     facts: DataFrame, spec: SnapshotSpec, dates: Sequence[str]
 ) -> DataFrame:
-    """Scale mode: every snapshot date in one pass of per-entity running
-    windows (module docstring)."""
+    """Every snapshot date in one pass of per-entity running windows
+    (module docstring); equal to ``snapshot_one`` per date, unioned."""
     aggs = _aggs(spec)
     keys = list(spec.entity_keys)
     rows, inputs = _inputs(facts, spec, aggs)

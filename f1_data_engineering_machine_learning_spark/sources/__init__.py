@@ -11,7 +11,6 @@ from f1_data_engineering_machine_learning_spark.io import (  # noqa: F401
     read_csv_all_string,
     read_sql_file,
     read_table,
-    register_testdata_views,
     register_view,
     resolve_glob,
     vacuum,

@@ -35,20 +35,3 @@ def run_sql_file(
     """S13 + S14: read a .sql file, apply args, execute."""
     return run_sql(spark, read_sql_file(path), args)
 
-
-def create_table_from_sql(
-    spark: SparkSession,
-    path: str,
-    output_path: str,
-    args: dict[str, object] | None = None,
-) -> DataFrame:
-    """The reference's ``create_table`` (/root/reference/scripts/spark_ops.py:67-96):
-    table name = SQL file stem, full overwrite, re-registered as a view."""
-    from f1_data_engineering_machine_learning_spark.io import (
-        register_view,
-        write_table_overwrite,
-    )
-
-    df = run_sql_file(spark, path, args)
-    write_table_overwrite(df, output_path)
-    return register_view(spark, output_path)

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from f1_data_engineering_machine_learning_spark.dataops import dedup, similarity, text
+from tests import seqfold
 
 
 @pytest.fixture(scope="module")
@@ -234,12 +235,19 @@ def test_incremental_minhash_equals_one_sided_exact(spark, sf_dir):
 def test_simhash_identical_and_near(docs):
     sims = {r.id: r.simhash for r in dedup.simhash(docs, "doc_id", "text").collect()}
     assert sims[0] == sims[4]  # identical text -> identical sketch
-    # both implementations produce the same sketch
-    via_udf = {
-        r.id: r.simhash
-        for r in dedup.simhash(docs, "doc_id", "text", impl="pandas_udf").collect()
-    }
-    assert sims == via_udf
+    # per-bit majority vote over Spark's own xxhash64 token hashes
+    hashes = docs.select(
+        "doc_id",
+        F.transform(text.tokens("text"), lambda t: F.xxhash64(t)).alias("h"),
+    ).collect()
+    want = {}
+    for r in hashes:
+        sim = 0
+        for b in range(64):
+            if 2 * sum((h >> b) & 1 for h in r.h) > len(r.h):
+                sim |= 1 << b
+        want[r.doc_id] = sim - (1 << 64) if sim >= 1 << 63 else sim
+    assert sims == want
     cand = {(r.i, r.j): r.hamming for r in dedup.simhash_candidates(
         docs, "doc_id", "text", max_hamming=3).collect()}
     assert cand.get((0, 4)) == 0
@@ -531,76 +539,53 @@ def test_semantic_dedup_max_cluster_guard(spark):
     assert full[0] is True and sum(full.values()) == 1
 
 
-def test_semantic_dedup_join_equals_literal(planted_vectors):
-    # the broadcast-join quantizer (k-independent plan, the production
-    # path) and the literal quantizer (the small-k oracle twin) must
-    # agree bitwise: same sequential folds over the same cid-ordered
-    # centroids, same max-cosine/smallest-cid tie rule
-    def rows(mode, **kw):
-        return sorted(
-            (r.vec_id, r.centroid, r.kept)
-            for r in similarity.semantic_dedup_deterministic(
-                planted_vectors, threshold=0.95, n_centroids=16, assign=mode, **kw
-            ).collect()
-        )
+def _semdedup_rows(df, **kw):
+    return {
+        r.vec_id: (r.centroid, r.kept)
+        for r in similarity.semantic_dedup_deterministic(df, **kw).collect()
+    }
 
-    assert rows("join", dim=16) == rows("literal", dim=16)
-    # and with the generic (unknown-dim) fold arithmetic
-    assert rows("join") == rows("literal")
+
+def _vector_rows(df):
+    return [(r.vec_id, list(r.embedding)) for r in df.collect()]
+
+
+def test_semantic_dedup_matches_seqfold_replay(planted_vectors):
+    # the broadcast-frame assignment and the Arrow per-cluster kernel
+    # must reproduce the sequential-fold replay EXACTLY — centroids and
+    # kept flags, with the unrolled fixed-dim norm and with the generic
+    # fold — at a k where clusters hold several planted pairs
+    for k in (8, 16):
+        want = seqfold.semdedup(_vector_rows(planted_vectors), k, 0.95)
+        assert sorted(j for j, (_, kept) in want.items() if not kept) == [
+            100, 101, 102, 103, 104
+        ]
+        for kw in ({"dim": 16}, {}):
+            got = _semdedup_rows(
+                planted_vectors, threshold=0.95, n_centroids=k, **kw
+            )
+            assert got == want, (k, kw)
 
 
 def test_semantic_dedup_join_plan_size_k_independent(planted_vectors):
-    # the round-3 verdict's one perf-weak finding: the literal plan grew
-    # O(k x dim) expression nodes, so at production SemDeDup k (tens of
-    # thousands) the PLAN became the bottleneck. The join path carries
-    # centroids as broadcast data — optimized-plan text must not grow
-    # with k (tolerance covers id-width/jitter, not structural growth).
-    def plan_chars(k, mode):
+    # a literal centroid array grows the plan O(k x dim) expression nodes,
+    # so at production SemDeDup k (tens of thousands) the PLAN becomes the
+    # bottleneck. Centroids ride as broadcast data instead — optimized-
+    # plan text must not grow with k (tolerance covers id-width/jitter,
+    # not structural growth).
+    def plan_chars(k):
         df = similarity.semantic_dedup_deterministic(
-            planted_vectors, threshold=0.95, n_centroids=k, dim=16, assign=mode
+            planted_vectors, threshold=0.95, n_centroids=k, dim=16
         )
         return len(df._jdf.queryExecution().optimizedPlan().toString())
 
-    join_ratio = plan_chars(32, "join") / plan_chars(4, "join")
-    literal_ratio = plan_chars(32, "literal") / plan_chars(4, "literal")
-    assert join_ratio < 1.1
-    assert literal_ratio > 1.5  # the shape the join path exists to avoid
-
-
-def test_semantic_dedup_rejects_unknown_assign(planted_vectors):
-    with pytest.raises(ValueError, match="assign"):
-        similarity.semantic_dedup_deterministic(
-            planted_vectors, assign="kmeans"
-        )
-
-
-def test_semantic_dedup_arrow_equals_join_pair_scan(planted_vectors):
-    # the Arrow per-cluster kernel (round-13 default) must agree with the
-    # pure-JVM HOF join condition EXACTLY: the kernel accumulates dots
-    # sequentially across elements (vectorized across pairs), which is
-    # bitwise the fold — so kept flags and centroids cannot differ
-    def rows(scan, **kw):
-        return sorted(
-            (r.vec_id, r.centroid, r.kept)
-            for r in similarity.semantic_dedup_deterministic(
-                planted_vectors, threshold=0.95, n_centroids=8,
-                pair_scan=scan, **kw
-            ).collect()
-        )
-
-    assert rows("arrow", dim=16) == rows("join", dim=16)
-    assert rows("arrow") == rows("join")
-    with pytest.raises(ValueError, match="pair_scan"):
-        similarity.semantic_dedup_deterministic(
-            planted_vectors, pair_scan="udf"
-        )
+    assert plan_chars(32) / plan_chars(4) < 1.1
 
 
 def test_semantic_dedup_arrow_blocked_kernel_tiles(spark):
-    # force multi-block kernel tiling (m > blk would need 2049 rows; the
-    # tile loop is exercised with a tiny block via monkeypatching numpy
-    # shapes is intrusive — instead verify a 3-cluster corpus with
-    # chained drops agrees across scan engines, including boundary ids)
+    # a block of identical vectors (which also ties the two sampled
+    # centroids) plus a chain of adjacent near-dups, boundary ids
+    # included, against the replay
     import math
 
     def unit(theta):
@@ -610,19 +595,9 @@ def test_semantic_dedup_arrow_blocked_kernel_tiles(spark):
     rows_in = [(i, unit(i * step * 0.0)) for i in range(6)]  # 6 identical
     rows_in += [(10 + i, unit(math.pi / 2 + i * step)) for i in range(3)]
     df = spark.createDataFrame(rows_in, ["vec_id", "embedding"])
-    a = sorted(
-        (r.vec_id, r.centroid, r.kept)
-        for r in similarity.semantic_dedup_deterministic(
-            df, threshold=0.95, n_centroids=2, dim=4, pair_scan="arrow"
-        ).collect()
-    )
-    b = sorted(
-        (r.vec_id, r.centroid, r.kept)
-        for r in similarity.semantic_dedup_deterministic(
-            df, threshold=0.95, n_centroids=2, dim=4, pair_scan="join"
-        ).collect()
-    )
-    assert a == b
+    got = _semdedup_rows(df, threshold=0.95, n_centroids=2, dim=4)
+    assert got == seqfold.semdedup(rows_in, 2, 0.95)
+    assert [got[i][1] for i in range(6)] == [True] + [False] * 5
 
 
 def test_semantic_dedup_chain_drops_both(spark):
@@ -775,8 +750,6 @@ def test_portable_simhash_candidates(spark):
          for r in simhash(docs.repartition(5), "doc_id", "text", portable=True).collect()}
     assert a == b
     assert all(0 <= v < (1 << 60) for v in a.values())
-    with pytest.raises(ValueError, match="jvm-impl only"):
-        simhash(docs, "doc_id", "text", impl="pandas_udf", portable=True)
 
 
 def test_strip_markup_edges(spark):
@@ -846,43 +819,51 @@ def test_pq_codeword_rows_encode_to_themselves(spark, sf_dir):
         assert enc[vid] == [code] * 8
 
 
-def test_pq_encode_arrow_equals_sql(spark, sf_dir):
-    """The vectorized pandas-UDF encoder (round-13 default) must emit
-    the EXACT codes of the literal-fold JVM encoder: distances are
-    bitwise-equal (sequential accumulation, one rounded sub/mul/add per
-    term) so argmin ties resolve identically (first minimum = smallest
-    code)."""
+def test_pq_encode_matches_seqfold_argmin(spark, sf_dir):
+    """The vectorized pandas-UDF encoder must emit the EXACT codes of the
+    sequential-fold replay: per subspace, the first minimum (smallest
+    code) of the squared-L2 fold against every codeword."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cb = similarity.pq_codebooks_deterministic(emb, m=16, ksub=32, dim=64)
+    dsub = 64 // 16
+    got = {
+        r.neighbor_id: list(r["__codes"])
+        for r in similarity.pq_encode_deterministic(emb, cb).collect()
+    }
+    want = {
+        vid: [
+            seqfold.argmin_first(
+                [seqfold.l2sq(v[j * dsub : (j + 1) * dsub], cw) for cw in cb[j]]
+            )
+            for j in range(16)
+        ]
+        for vid, v in _vector_rows(emb)
+    }
+    assert got == want
 
-    def codes(engine):
-        return {
-            r.neighbor_id: list(r["__codes"])
-            for r in similarity.pq_encode_deterministic(
-                emb, cb, engine=engine
-            ).collect()
-        }
 
-    assert codes("arrow") == codes("sql")
-    with pytest.raises(ValueError, match="engine"):
-        similarity.pq_encode_deterministic(emb, cb, engine="udf")
-
-
-def test_l2_topk_arrow_equals_sql(spark, sf_dir):
-    """The mapInPandas pair scorer (round-13 default) must reproduce the
-    JVM l2sq fold bitwise — ranks AND distances."""
+def test_l2_topk_matches_seqfold_bitwise(spark, sf_dir):
+    """The mapInPandas pair scorer must reproduce the sequential l2sq
+    fold bitwise — ranks AND distances."""
     import struct
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 10)
-
-    def rows(engine):
-        return sorted(
-            (r.query_id, r.rank, r.neighbor_id, struct.pack("<d", r.l2_dist))
-            for r in similarity.l2_topk(q, emb, k=5, engine=engine).collect()
+    corpus = _vector_rows(emb)
+    want = []
+    for qid, qv in _vector_rows(q):
+        scored = sorted(
+            (seqfold.l2sq(qv, cv), cid) for cid, cv in corpus if cid != qid
         )
-
-    assert rows("arrow") == rows("sql")
+        want += [
+            (qid, rank, cid, struct.pack("<d", d))
+            for rank, (d, cid) in enumerate(scored[:5], 1)
+        ]
+    got = sorted(
+        (r.query_id, r.rank, r.neighbor_id, struct.pack("<d", r.l2_dist))
+        for r in similarity.l2_topk(q, emb, k=5).collect()
+    )
+    assert got == sorted(want)
 
 
 def test_pq_rerank_beats_raw_adc_recall(spark, sf_dir):
@@ -1273,11 +1254,11 @@ def test_incremental_semantic_dedup_flags_planted_twins(spark):
         assert math.isclose(r["cosine_sim"], 1 / math.sqrt(1 + eps * eps), rel_tol=1e-9)
 
 
-def test_incremental_semantic_dedup_arrow_equals_join(spark):
-    """The cogrouped Arrow kernel (round-13 default) must reproduce the
-    HOF join-condition path EXACTLY — including the emitted cosine_sim
-    DOUBLES (the kernel's sequential-across-elements accumulation is
-    bitwise the fold), not just the matched pairs."""
+def test_incremental_semantic_dedup_matches_seqfold_replay(spark):
+    """The cogrouped Arrow kernel must reproduce the sequential-fold
+    replay EXACTLY — including the emitted cosine_sim DOUBLES, not just
+    the matched pairs — with the fixed-dim norm and with the generic
+    fold."""
     import struct
 
     from f1_data_engineering_machine_learning_spark.dataops.similarity import (
@@ -1288,20 +1269,29 @@ def test_incremental_semantic_dedup_arrow_equals_join(spark):
 
     rng = _r.Random(13)
     dim = 8
-    corpus = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    base = {r["vec_id"]: list(r["embedding"]) for r in corpus.collect()}
+    corpus_rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(40)]
     batch_rows = [
-        (100 + i, [x + 0.001 * i for x in base[i]]) for i in range(10)
+        (100 + i, [x + 0.001 * i for x in corpus_rows[i][1]]) for i in range(10)
     ]
+    corpus = spark.createDataFrame(
+        corpus_rows, "vec_id long, embedding array<double>"
+    )
     batch = spark.createDataFrame(
         batch_rows, "vec_id long, embedding array<double>"
     )
+    cents = seqfold.centroids(corpus_rows, 4)
+    c_assign = {cid: seqfold.assign(cv, cents) for cid, cv in corpus_rows}
+    want = sorted(
+        (bid, cid, c_assign[cid], struct.pack("<d", seqfold.cosine(bv, cv)))
+        for bid, bv in batch_rows
+        for cid, cv in corpus_rows
+        if seqfold.assign(bv, cents) == c_assign[cid]
+        and seqfold.cosine(bv, cv) >= 0.5
+    )
+    assert want  # the planted twins match
 
-    def rows(scan, **kw):
-        return sorted(
+    for kw in ({"dim": dim}, {}):
+        got = sorted(
             (
                 r["batch_id"],
                 r["corpus_id"],
@@ -1309,13 +1299,10 @@ def test_incremental_semantic_dedup_arrow_equals_join(spark):
                 struct.pack("<d", r["cosine_sim"]),
             )
             for r in incremental_semantic_dedup(
-                batch, corpus, threshold=0.5, n_centroids=4,
-                pair_scan=scan, **kw
+                batch, corpus, threshold=0.5, n_centroids=4, **kw
             ).collect()
         )
-
-    assert rows("arrow", dim=dim) == rows("join", dim=dim)
-    assert rows("arrow") == rows("join")
+        assert got == want, kw
 
 
 def test_incremental_semantic_dedup_plan_is_one_sided(spark):
@@ -1345,32 +1332,32 @@ def test_incremental_semantic_dedup_plan_is_one_sided(spark):
 
 def test_dot_hof_sql_bitwise_equals_unrolled_chain(spark):
     """_dot_hof_sql (the single-traversal pair-scan form) must stay
-    bitwise-equal to _dot_fixed_sql (the unrolled chain the DuckDB
-    oracles replay): same left fold, same 0.0 seed, term for term. Any
-    reordering would silently shift oracle hashes on every cosine
-    query."""
+    bitwise-equal to the unrolled chain ``((0.0 + a1*b1) + a2*b2) + ...``
+    the DuckDB oracles replay, here folded in Python: same left fold,
+    same 0.0 seed, term for term. Any reordering would silently shift
+    oracle hashes on every cosine query."""
     import random as _r
+    import struct
 
     from f1_data_engineering_machine_learning_spark.dataops.similarity import (
-        _dot_fixed_sql,
         _dot_hof_sql,
     )
 
     rng = _r.Random(77)
     rows = [
         (
+            i,
             [rng.uniform(-10, 10) for _ in range(17)],
             [rng.uniform(-10, 10) for _ in range(17)],
         )
-        for _ in range(50)
+        for i in range(50)
     ]
-    df = spark.createDataFrame(rows, "a array<double>, b array<double>")
-    n = df.filter(
-        ~F.expr(_dot_hof_sql("a", "b")).eqNullSafe(
-            F.expr(_dot_fixed_sql("a", "b", 17))
-        )
-    ).count()
-    assert n == 0
+    df = spark.createDataFrame(rows, "i int, a array<double>, b array<double>")
+    got = {
+        r.i: struct.pack("<d", r.d)
+        for r in df.select("i", F.expr(_dot_hof_sql("a", "b")).alias("d")).collect()
+    }
+    assert got == {i: struct.pack("<d", seqfold.dot(a, b)) for i, a, b in rows}
 
 
 def test_mllib_lsh_parity_bound_vs_rp_lsh_twin(spark, sf_dir):

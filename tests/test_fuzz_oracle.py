@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from f1_data_engineering_machine_learning_spark.functions import davg, dsum
+from tests import seqfold
 from tests.util_compare import assert_frames_equal
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -453,23 +454,9 @@ def test_fuzz_incremental_semantic_dedup_matches_python_replay(spark):
     (max cosine, smallest-cid ties), max_cluster guard, and the
     sequential-fold cosine — EXACT float equality of every emitted
     (batch_id, corpus_id, centroid, cosine_sim)."""
-    import math
-
     from f1_data_engineering_machine_learning_spark.dataops.similarity import (
         incremental_semantic_dedup,
     )
-
-    def _dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
-    def _norm(a):
-        acc = 0.0
-        for x in a:
-            acc = acc + x * x
-        return math.sqrt(acc)
 
     rng = random.Random(8008)
     for trial in range(5):
@@ -488,28 +475,18 @@ def test_fuzz_incremental_semantic_dedup_matches_python_replay(spark):
         # plant a near-duplicate so matches exist at high thresholds
         batch_rows.append((2000, list(corpus_rows[3][1])))
 
-        cents = [
-            (cid, cv, _norm(cv))
-            for cid, cv in sorted(corpus_rows)[:k]
-        ]
-
-        def assign(v):
-            nv = _norm(v)
-            return min(
-                (-(_dot(v, cv) / (nv * cn)), cid) for cid, cv, cn in cents
-            )[1]
-
-        c_assign = {cid: assign(v) for cid, v in corpus_rows}
+        cents = seqfold.centroids(corpus_rows, k)
+        c_assign = {cid: seqfold.assign(v, cents) for cid, v in corpus_rows}
         sizes: dict = {}
         for cl in c_assign.values():
             sizes[cl] = sizes.get(cl, 0) + 1
         want = set()
         for bid, bv in batch_rows:
-            bc = assign(bv)
+            bc = seqfold.assign(bv, cents)
             for cid, cv in corpus_rows:
                 if c_assign[cid] != bc or sizes[bc] > max_cluster:
                     continue
-                sim = _dot(bv, cv) / (_norm(bv) * _norm(cv))
+                sim = seqfold.cosine(bv, cv)
                 if sim >= thr:
                     want.add((bid, cid, bc, sim))
 

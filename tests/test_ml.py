@@ -30,7 +30,7 @@ from f1_data_engineering_machine_learning_spark.pipeline.fixtures import results
 @pytest.fixture(scope="module")
 def abt(spark):
     results = results_fixture(spark)
-    fs = driver_feature_store(results, event_dates(results), mode="single_pass")
+    fs = driver_feature_store(results, event_dates(results))
     return abt_champions(fs, champions(results), oot_bound=2024).cache()
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from f1_data_engineering_machine_learning_spark.operators.reshape import union_all
 from f1_data_engineering_machine_learning_spark.pipeline import (
     abt_champions,
     champions,
@@ -174,15 +175,51 @@ def test_feature_snapshot_matches_reference_sql(f1, date):
 
 
 def test_loop_and_single_pass_agree(f1):
+    # reference: one per-date snapshot aggregation per date, unioned
     dates = ["2022-03-05", "2022-07-01", "2023-07-15"]
-    a = driver_feature_store(f1["df"], dates, mode="loop").toPandas()
-    b = driver_feature_store(f1["df"], dates, mode="single_pass").toPandas()
+    a = union_all([driver_feature_snapshot(f1["df"], d) for d in dates]).toPandas()
+    b = driver_feature_store(f1["df"], dates).toPandas()
     assert_frames_equal(a, b, "loop-vs-single-pass")
+
+
+def test_incremental_ingest_equals_single_pass_store(f1, tmp_path):
+    """The reference's per-date slice overwrite (IncrementalIngestor over
+    driver_feature_snapshot) and the single-pass store agree row for row
+    over dates that cross a season boundary (last two 2021 events, first
+    three 2022 events) and a sprint weekend (2022's sprint Saturday and
+    race Sunday), read back from the partitioned table."""
+    from pyspark.sql import functions as F
+
+    from f1_data_engineering_machine_learning_spark.pipeline.feature_store import (
+        driver_snapshot_columns,
+    )
+    from f1_data_engineering_machine_learning_spark.plans import IncrementalIngestor
+
+    all_dates = event_dates(f1["df"])
+    dates = [d for d in all_dates if d < "2022"][-2:]
+    dates += [d for d in all_dates if d.startswith("2022")][:3]
+    assert dates[-2:] == ["2022-03-14", "2022-03-15"]  # sprint, race
+    ing = IncrementalIngestor(
+        lambda d: driver_feature_snapshot(f1["df"], d), str(tmp_path / "fs")
+    )
+    ing.exec(dates)
+    # dtYear/dtRef come back as partition columns: restore their types
+    ref = F.col("dtRef").cast("date")
+    got = (
+        ing.read()
+        .withColumn("dtYear", F.year(ref))
+        .withColumn("dtRef", F.date_format(ref, "yyyy-MM-dd"))
+        .select(*driver_snapshot_columns())
+        .toPandas()
+    )
+    want = driver_feature_store(f1["df"], dates).toPandas()
+    assert_frames_equal(got, want, "incremental-vs-single-pass")
+    assert sorted(set(got["dtRef"])) == dates
 
 
 def test_abt_labels(f1):
     dates = event_dates(f1["df"])
-    fs = driver_feature_store(f1["df"], dates[-4:], mode="single_pass")
+    fs = driver_feature_store(f1["df"], dates[-4:])
     champ = champions(f1["df"])
     abt = abt_champions(fs, champ, oot_bound=2024).toPandas()
     assert set(abt["flChamp"]) <= {0, 1}

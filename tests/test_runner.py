@@ -90,20 +90,6 @@ def test_stream_dedup_matches_batch(spark, sf_dir, tmp_path):
     assert deduped.count() == ev.count()
 
 
-def test_pipeline_runner_incremental_mode_agrees(spark, tmp_path):
-    """The incremental (per-date slice) materialization must produce the
-    same ABT row count as the single-pass mode — the reference's mechanism
-    and the scale mode are interchangeable end to end."""
-    from f1_data_engineering_machine_learning_spark.pipeline.run import run_pipeline
-
-    a = run_pipeline(spark, str(tmp_path / "sp"), oot_year=2023)
-    b = run_pipeline(
-        spark, str(tmp_path / "inc"), oot_year=2023, incremental=True
-    )
-    assert a["n_abt_rows"] == b["n_abt_rows"]
-    assert a["n_snapshots"] == b["n_snapshots"]
-
-
 # ---------------------------------------------------------------------------
 # conform_schema (io.py): schema-evolution gate
 # ---------------------------------------------------------------------------

@@ -1,5 +1,6 @@
-"""Property: snapshot loop == single-pass (window engine) on randomized
-fact tables and on the calendar edge cases, with ANSI on and off."""
+"""Property: per-date snapshots unioned (``snapshot_loop``, the test-side
+reference) == single-pass (window engine) on randomized fact tables and on
+the calendar edge cases, with ANSI on and off."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from f1_data_engineering_machine_learning_spark.operators.reshape import union_all
 from f1_data_engineering_machine_learning_spark.plans.snapshot import (
     SnapshotSpec,
     asof,
@@ -16,11 +18,17 @@ from f1_data_engineering_machine_learning_spark.plans.snapshot import (
     scoped_count,
     scoped_median,
     scoped_sum,
-    snapshot_loop,
+    snapshot_one,
     snapshot_single_pass,
     trailing,
 )
 from tests.util_compare import assert_frames_equal
+
+
+def snapshot_loop(facts, spec: SnapshotSpec, dates):
+    """The reference for the window engine: one ``snapshot_one``
+    aggregation per date, unioned."""
+    return union_all([snapshot_one(facts, spec, d) for d in dates])
 
 
 @pytest.fixture(params=[False, True], ids=["ansi_off", "ansi_on"])
