@@ -550,20 +550,44 @@ def _vector_rows(df):
     return [(r.vec_id, list(r.embedding)) for r in df.collect()]
 
 
-def test_semantic_dedup_matches_seqfold_replay(planted_vectors):
-    # the broadcast-frame assignment and the Arrow per-cluster kernel
-    # must reproduce the sequential-fold replay EXACTLY — centroids and
-    # kept flags, with the unrolled fixed-dim norm and with the generic
-    # fold — at a k where clusters hold several planted pairs
+def test_semantic_dedup_join_equals_literal(planted_vectors):
+    # the broadcast-join quantizer (k-independent plan) must pick, for
+    # every vector, the centroid the literal sampled centroids pick under
+    # the sequential-fold replay: same cid-ordered centroids, same
+    # max-cosine/smallest-cid tie rule, with the unrolled fixed-dim norm
+    # and with the generic fold
+    rows = _vector_rows(planted_vectors)
     for k in (8, 16):
-        want = seqfold.semdedup(_vector_rows(planted_vectors), k, 0.95)
-        assert sorted(j for j, (_, kept) in want.items() if not kept) == [
-            100, 101, 102, 103, 104
-        ]
+        cents = seqfold.centroids(rows, k)
+        want = {i: seqfold.assign(v, cents) for i, v in rows}
         for kw in ({"dim": 16}, {}):
             got = _semdedup_rows(
                 planted_vectors, threshold=0.95, n_centroids=k, **kw
             )
+            assert {i: c for i, (c, _) in got.items()} == want, (k, kw)
+
+
+def test_semantic_dedup_arrow_equals_join_pair_scan(planted_vectors):
+    # the Arrow per-cluster kernel must agree EXACTLY with the all-pairs
+    # HOF join (a vector is dropped iff a smaller-id cluster-mate is a
+    # join pair) and with the sequential-fold replay — centroids and kept
+    # flags, with and without dim, at a k where clusters hold several
+    # planted pairs
+    for kw in ({"dim": 16}, {}):
+        pairs = [
+            (r.i, r.j)
+            for r in similarity.embedding_cosine_dup_pairs(
+                planted_vectors, threshold=0.95, **kw
+            ).collect()
+        ]
+        for k in (8, 16):
+            got = _semdedup_rows(
+                planted_vectors, threshold=0.95, n_centroids=k, **kw
+            )
+            dropped = {j for i, j in pairs if got[i][0] == got[j][0]}
+            assert {j for j, (_, kept) in got.items() if not kept} == dropped
+            assert dropped == {100, 101, 102, 103, 104}
+            want = seqfold.semdedup(_vector_rows(planted_vectors), k, 0.95)
             assert got == want, (k, kw)
 
 
