@@ -44,22 +44,20 @@ def main() -> None:
 
     # Previous committed run (read BEFORE this run overwrites the file):
     # its per-query warm comparator feeds the mover re-time rule below,
-    # closing the round-9 blind spot where a query drifting under the
-    # absolute re-time threshold (bigram_collocations, 1.08 -> 1.92 s)
-    # was never warm-verified. Round 11 hardens the comparator per the
-    # r10 verdict: instead of the LATEST run's warm times (whose first
-    # run may itself have been a sub-threshold JIT spike, inflating the
-    # comparator — cheapest_supplier_per_part slid at 1.503x vs the r9
-    # canonical because the interim comparator read 1.493 instead of
-    # 1.361), the file now carries ``warm_floor``: the per-query MINIMUM
-    # warm time over ALL recorded runs. A floor can only ratchet down,
-    # so a spike in one run can never mask a later regression. Read
-    # trips with the box state in mind: a contended run re-times many
-    # queries whose WARM times also sit above floor (measured round 11:
-    # 28 movers on the noisy run, none >=1.5x-floor-with->0.5s-excess
-    # on the same-code quiet run) — a regression is confirmed only when
-    # the QUIET-box canonical runs trip the floor round after round;
-    # settle those in PERF.md.
+    # so a query drifting under the absolute re-time threshold
+    # (bigram_collocations, 1.08 -> 1.92 s) is still warm-verified. The
+    # comparator is not the LATEST run's warm times (whose first run may
+    # itself have been a sub-threshold JIT spike, inflating the
+    # comparator — cheapest_supplier_per_part once slid at 1.503x
+    # because the comparator read 1.493 instead of 1.361); the file
+    # carries ``warm_floor``: the per-query MINIMUM warm time over ALL
+    # recorded runs. A floor can only ratchet down, so a spike in one
+    # run can never mask a later regression. Read trips with the box
+    # state in mind: a contended run re-times many queries whose WARM
+    # times also sit above floor (measured: 28 movers on a noisy run,
+    # none >=1.5x-floor-with->0.5s-excess on a same-code quiet run) — a
+    # regression is confirmed only when quiet-box canonical runs trip
+    # the floor run after run; settle those in PERF.md.
     prev_warm: dict[str, float] = {}
     try:
         prev = json.loads((REPO / "bench_full.json").read_text())
@@ -106,14 +104,13 @@ def main() -> None:
         except Exception:  # noqa: BLE001 - warmup must never sink the run
             pass
         spark.catalog.clearCache()
-    # The round-12 second-stage warmup (re-running the PREVIOUS run's
-    # JIT-spike list at sf_dir, round-11 verdict task 8) is REVERTED in
-    # round 13: it cost ~264 s of untimed wall per bench for zero
+    # No second-stage warmup re-running the previous run's JIT-spike
+    # list at sf_dir: it cost ~264 s of untimed wall per bench for zero
     # measured benefit — the spike set is box-state-specific, so warming
-    # the committed list did not predict (or prevent) the driver box's
-    # spikes (n_jit_spikes went 35 -> 72 with the warmup in place,
-    # round-12 PERF). Spike robustness comes from the warm re-time loop
-    # below, not from pre-warming.
+    # the committed list did not predict (or prevent) the next run's
+    # spikes (n_jit_spikes went 35 -> 72 with that warmup in place, see
+    # PERF.md). Spike robustness comes from the warm re-time loop below,
+    # not from pre-warming.
     warmup_sec = round(time.time() - t_warm, 3)
 
     timings: dict[str, float] = {}
@@ -136,10 +133,10 @@ def main() -> None:
     # runs; rerun_best records min(first, reruns) and jit_spikes lists
     # queries whose first run was >= 1.5x their warm best — those are
     # spikes, not regressions. The headline total stays the single-pass
-    # sum (comparable to every earlier round). MOVERS — queries whose
+    # sum (comparable to every earlier run). MOVERS — queries whose
     # first run is >= 1.5x their previous committed warm comparator —
     # are re-timed too, whatever their absolute time, so sub-threshold
-    # drift is always warm-verified (round-10 rule).
+    # drift is always warm-verified.
     n_reruns = int(os.environ.get("SPARK_GRAFT_BENCH_RERUNS", "2"))
     rerun_threshold = float(
         os.environ.get("SPARK_GRAFT_BENCH_RERUN_THRESHOLD", "2.5")
@@ -171,11 +168,11 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     # The SPIKE-ROBUST comparator (PERF.md "Bench totals"): per query,
     # the warm best where a re-time ran, else the single first run.
-    # Same-code single-pass totals spread up to ±27% on this box (three
-    # same-day r8 runs: 175.5 / 215.2 / 239.4 s — all JIT/code-cache
+    # Same-code single-pass totals spread up to ±27% on a 4-core box
+    # (three same-day runs: 175.5 / 215.2 / 239.4 s — all JIT/code-cache
     # spikes, confirmed by rerun_best); warm_total strips exactly that,
-    # so it is the round-over-round number. `value` stays the single-pass
-    # sum for comparability with rounds 1-8.
+    # so it is the run-over-run comparator. `value` stays the
+    # single-pass sum for comparability with older recorded runs.
     warm_total = round(
         sum(rerun_best.get(n, t) for n, t in timings.items()), 3
     )
@@ -187,8 +184,8 @@ def main() -> None:
     }
     # Master/parallelism stamped on the output so the driver can verify
     # the core-count contract (local[$SPARK_GRAFT_CPUS]) from the JSON
-    # line itself — the round-12 scaling probe flagged
-    # `suspect_cpus_ignored` only because the line omitted them.
+    # line itself — a scaling probe once flagged `suspect_cpus_ignored`
+    # only because the line omitted them.
     cpus = spark.sparkContext.defaultParallelism
     master = spark.sparkContext.master
     full = {
@@ -214,9 +211,9 @@ def main() -> None:
     (REPO / "bench_full.json").write_text(json.dumps(full, indent=1))
     # The printed line must stay WELL under the driver's 2,000-char
     # stdout-tail capture or the head of the JSON (metric/value/
-    # warm_total) is truncated and the round records "parsed": null —
-    # exactly what happened in round 10, when 50 jit_spike names pushed
-    # the line past the window. Lists are therefore capped to counts +
+    # warm_total) is truncated and the run records "parsed": null —
+    # exactly what happened once when 50 jit_spike names pushed the
+    # line past the window. Lists are therefore capped to counts +
     # a few names, and a shrink loop drops query entries until the
     # serialized line fits with margin.
     top = sorted(timings.items(), key=lambda kv: -kv[1])[:10]

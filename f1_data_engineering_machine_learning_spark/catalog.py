@@ -8527,9 +8527,10 @@ def lineitem_price_equidepth_hist_ranked(spark: SparkSession, sf_dir: str) -> Da
     (dataops/quality.py::equidepth_histogram, route="rank") — the
     100 TB path for unbounded-cardinality columns, here under a full
     value oracle on the engine's biggest table: one range exchange +
-    O(P)-row counts collect, a map-only pick of the <=2k+2 globally
-    needed ranks, driver-side interpolation with Spark's exact
-    percentile formula, then the shared broadcast + count scan. The
+    O(P)-row counts collect, a map-only JVM row-id filter picking the
+    <=2k+2 globally needed ranks (no Python worker), driver-side
+    interpolation with Spark's exact percentile formula, then one count
+    scan of the same range-partitioned frame. The
     oracle is quantile_cont-based and ARM-INDEPENDENT (the map/rank
     equivalence is bitwise on quantized input, tests/test_quality.py);
     n_bins=8 keeps every i/8 percentile fraction an exact binary
@@ -8566,7 +8567,9 @@ def lineitem_quantity_percentiles_ranked(spark: SparkSession, sf_dir: str) -> Da
     (dataops/quality.py::exact_percentiles) under a full value oracle,
     FORCED onto the range-partitioned order-statistics arm — the
     100 TB path when a column's cardinality is unbounded: (frac, value)
-    rows for the quartiles / p87.5 / max of line-item quantity. All
+    rows for the quartiles / p87.5 / max of line-item quantity: a
+    counts pass and a JVM row-id pick over one lineage-cut range
+    partitioning (no Python worker), then driver-side interpolation. All
     fracs are exact binary fractions, so interpolation weights are
     exact cross-engine and the quantile_cont oracle is arm-independent
     (map/rank bitwise equivalence is pinned in tests/test_quality.py).

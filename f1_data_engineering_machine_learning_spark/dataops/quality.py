@@ -524,17 +524,18 @@ def _rank_order_stats(
     """Exact percentile boundaries WITHOUT the value->count map: the
     two-pass range-partitioned ORDER-STATISTICS path for
     unbounded-cardinality columns. Pass 1 range-partitions the column
-    and counts rows per range (an O(P)-row collect); pass 2 is map-only
-    — each range partition emits just the rows sitting at the globally
-    needed ranks (<= 2*len(fracs)+2 rows total), located by local offset
+    and counts rows per range (an O(P)-row collect); pass 2 is one
+    map-only JVM filter that keeps just the rows sitting at the globally
+    needed ranks (<= 2*len(fracs)+2 rows total), matched by their
+    ``monotonically_increasing_id`` — partition id plus local offset
     inside the partition's sorted run. The driver then interpolates with
     Spark's own ``percentile`` formula
     ``(ceil(p)-p)*lower + (p-floor(p))*higher`` at ``p = f*(n-1)``
     (including the equal-endpoint shortcut), so on inputs where the
     interpolation is exact this arm is BITWISE the map arm — pinned by
     ``tests/test_quality.py``. Memory per task is one range partition's
-    sorted run (spillable sort, streamed Arrow batches) regardless of
-    distinct-value count.
+    sorted run (spillable sort; the pick streams it row by row, no
+    Python worker) regardless of distinct-value count.
 
     Returns ``(ranged, bounds, vmin, vmax)`` — ``ranged`` is the
     MATERIALIZED (lineage-cut) range-partitioned frame holding the
@@ -567,11 +568,9 @@ def _rank_order_stats(
     total = sum(c for _, c in by_pid)
     if total == 0:
         return None
-    starts: dict[int, int] = {}
-    cum = []
+    cum = []  # global rank of each partition's first row
     acc = 0
-    for pid, c in by_pid:
-        starts[pid] = acc
+    for _, c in by_pid:
         cum.append(acc)
         acc += c
     pos = [f * (total - 1) for f in fracs]
@@ -579,42 +578,22 @@ def _rank_order_stats(
     for p in pos:
         need.add(int(math.floor(p)))
         need.add(int(math.ceil(p)))
-    targets: dict[int, list[int]] = {}
-    for g in sorted(need):
+    # monotonically_increasing_id is (partition id << 33) + the row's
+    # position in its partition, so rank g, in partition i of the cut
+    # frame's sorted runs, has id (pid_i << 33) + (g - cum[i]). That
+    # holds only because the id is projected straight off the cut scan
+    # (no exchange, filter or union in between); Spark never pushes the
+    # id filter below that nondeterministic projection.
+    rank_of_id: dict[int, int] = {}
+    for g in need:
         i = bisect.bisect_right(cum, g) - 1
-        pid = by_pid[i][0]
-        targets.setdefault(pid, []).append(g - starts[pid])
-
-    def pick(it):
-        import pandas as pd
-
-        seen = 0
-        tgt: list[int] | None = None
-        ti = 0
-        start = 0
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            if tgt is None:
-                pid = int(pdf["__pid"].iloc[0])
-                tgt = targets.get(pid, [])
-                start = starts.get(pid, 0)
-            if ti < len(tgt):
-                idx = []
-                while ti < len(tgt) and tgt[ti] < seen + len(pdf):
-                    idx.append(tgt[ti] - seen)
-                    ti += 1
-                if idx:
-                    yield pd.DataFrame(
-                        {
-                            "g": [start + seen + i for i in idx],
-                            "v": pdf["__v"].iloc[idx].to_numpy(),
-                        }
-                    )
-            seen += len(pdf)
-
-    picked = ranged.mapInPandas(pick, "g long, v double").collect()
-    vals = {int(r["g"]): float(r["v"]) for r in picked}
+        rank_of_id[(by_pid[i][0] << 33) + g - cum[i]] = g
+    picked = (
+        ranged.select(F.monotonically_increasing_id().alias("__id"), "__v")
+        .filter(F.col("__id").isin(list(rank_of_id)))
+        .collect()
+    )
+    vals = {rank_of_id[int(r["__id"])]: float(r["__v"]) for r in picked}
     bnds: list[float] = []
     for p in pos:
         lo_i, hi_i = int(math.floor(p)), int(math.ceil(p))
@@ -630,15 +609,17 @@ def _rank_percentile_bounds(
 ) -> DataFrame:
     """:func:`_rank_order_stats` packaged as the one-row
     (__bounds, __min, __max) frame the map arm aggregates — the shared
-    downstream shape of :func:`exact_percentiles`."""
-    spark = rows.sparkSession
-    schema = "__bounds array<double>, __min double, __max double"
+    downstream shape of :func:`exact_percentiles`. The driver's floats
+    enter as typed literals over a one-partition, one-row range, so the
+    frame reads as one task instead of a parallelize of driver rows."""
     info = _rank_order_stats(rows, col, fracs)
-    if info is None:
-        # the map arm's global agg yields one all-null row on empty input
-        return spark.createDataFrame([(None, None, None)], schema)
-    _, bnds, vmin, vmax = info
-    return spark.createDataFrame([(bnds, vmin, vmax)], schema)
+    # the map arm's global agg yields one all-null row on empty input
+    _, bnds, vmin, vmax = info or (None, None, None, None)
+    return rows.sparkSession.range(1, numPartitions=1).select(
+        F.lit(bnds).cast("array<double>").alias("__bounds"),
+        F.lit(vmin).cast("double").alias("__min"),
+        F.lit(vmax).cast("double").alias("__max"),
+    )
 
 
 def exact_percentiles(
@@ -656,10 +637,11 @@ def exact_percentiles(
     distinct values) or the two-pass range-partitioned order-statistics
     arm above it (state bounded by one spillable partition sort,
     :func:`_rank_percentile_bounds`); ``route="map"``/``"rank"`` force
-    an arm. Both arms share percentile's interpolation formula, so on
-    exact-interpolation inputs the result is bitwise arm-independent
-    (pinned by tests). NULLs are excluded (SQL percentile semantics);
-    an empty input returns zero rows."""
+    an arm; neither starts a Python worker. Both arms share
+    percentile's interpolation formula, so on exact-interpolation
+    inputs the result is bitwise arm-independent, whatever the shuffle
+    partition count (pinned by tests). NULLs are excluded (SQL
+    percentile semantics); an empty input returns zero rows."""
     if not fracs:
         raise ValueError("fracs must be non-empty")
     if any(f < 0.0 or f > 1.0 for f in fracs):
@@ -738,7 +720,9 @@ def equidepth_histogram(
     Plan (map arm): one percentile aggregate (single row, broadcast) +
     one map-side-combinable count — two scans, shuffle rows = n_bins.
     Rank arm: one range exchange (+O(P)-row counts collect), one
-    map-only order-statistics pick, then the same broadcast + count.
+    map-only order-statistics pick (a JVM row-id filter, no Python
+    worker), then one count pass over the same cut frame with the
+    boundaries inlined as literals.
     """
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")

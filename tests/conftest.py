@@ -25,8 +25,8 @@ SF_SMOKE = "/root/testdata/sf0.001"
 #
 # Membership is mechanical where possible (any test whose name says fuzz/
 # soak/sweep) plus a named list of the catalog-wide sweeps and property
-# marathons measured >20 s each (timings: /tmp/pytest_full_r13.log,
-# --durations of the 758-test run).
+# marathons measured >20 s each (timings: `--durations` of a full
+# 758-test run).
 # ---------------------------------------------------------------------------
 
 SLOW_FILES = {"test_streaming_soak.py", "test_fuzz_oracle.py"}

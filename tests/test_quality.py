@@ -402,6 +402,25 @@ def test_equidepth_routes_bitwise_equivalent(spark):
         equidepth_histogram(df, "v", 7, distinct_threshold=10).collect(), key=key
     )
     assert [tuple(r) for r in got_auto] == [tuple(r) for r in got_map]
+    # Long tie runs straddling the needed ranks, negatives and a NULL,
+    # under 1, 7 and more range partitions than rows (some empty): the
+    # rank arm's partition-local pick must not depend on the layout.
+    ties = (
+        [(-3.0,)] * 37 + [(-0.5,)] * 5 + [(1.0,)] * 61 + [(4.0,)] * 20 + [(None,)]
+    )
+    tdf = spark.createDataFrame(ties, "v double")
+    want = sorted(equidepth_histogram(tdf, "v", 7, route="map").collect(), key=key)
+    assert sum(r.n for r in want) == 123
+    orig = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in ("1", "7", "500"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            got = sorted(
+                equidepth_histogram(tdf, "v", 7, route="rank").collect(), key=key
+            )
+            assert [tuple(r) for r in got] == [tuple(r) for r in want], parts
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", orig)
 
 
 def test_equidepth_rank_arm_edges(spark):
@@ -469,6 +488,69 @@ def test_exact_percentiles_routes_match_and_spark(spark):
     empty = spark.createDataFrame([], "v double")
     assert exact_percentiles(empty, "v", [0.5], route="rank").count() == 0
     assert exact_percentiles(empty, "v", [0.5], route="map").count() == 0
+    # Long tie runs straddling the needed ranks, negatives and a NULL,
+    # under 1, 7 and more range partitions than rows (some empty): the
+    # rank arm stays bitwise the map arm and Spark's percentile.
+    ties = (
+        [(-3.0,)] * 37 + [(-0.5,)] * 5 + [(1.0,)] * 61 + [(4.0,)] * 20 + [(None,)]
+    )
+    tdf = spark.createDataFrame(ties, "v double")
+    tfracs = [0.0, 0.1, 0.3, 0.33, 0.34, 0.5, 0.83, 0.84, 0.9, 1.0]
+    ref = tdf.agg(F.percentile("v", F.array(*[F.lit(f) for f in tfracs]))).first()[0]
+    want = set(zip(tfracs, ref))
+    got_map = {
+        (r.frac, r.value)
+        for r in exact_percentiles(tdf, "v", tfracs, route="map").collect()
+    }
+    assert got_map == want
+    orig = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in ("1", "7", "500"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            got = {
+                (r.frac, r.value)
+                for r in exact_percentiles(tdf, "v", tfracs, route="rank").collect()
+            }
+            assert got == want, parts
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", orig)
+
+
+def test_rank_arms_pick_in_the_jvm(spark, monkeypatch):
+    """Both rank arms pick their order statistics with a JVM filter: they
+    answer with the pandas and Arrow map hooks disabled, and the
+    percentile arm launches a fixed number of Spark jobs."""
+    from pyspark.sql import DataFrame
+
+    from f1_data_engineering_machine_learning_spark.dataops.quality import (
+        equidepth_histogram,
+        exact_percentiles,
+    )
+    from tests.util_jobs import jobs_launched
+
+    def no_python_worker(*args, **kw):
+        raise AssertionError("rank arm started a Python worker")
+
+    monkeypatch.setattr(DataFrame, "mapInPandas", no_python_worker)
+    monkeypatch.setattr(DataFrame, "mapInArrow", no_python_worker)
+    # 0..99 in scrambled order
+    df = spark.range(100).select(((F.col("id") * 37) % 100).cast("double").alias("v"))
+    got, jobs = jobs_launched(
+        spark,
+        lambda: {
+            (r.frac, r.value)
+            for r in exact_percentiles(df, "v", [0.25, 0.5, 1.0], route="rank").collect()
+        },
+    )
+    assert got == {(0.25, 24.75), (0.5, 49.5), (1.0, 99.0)}
+    assert jobs == 6
+    hist = equidepth_histogram(df, "v", 4, route="rank").collect()
+    assert sorted(tuple(r) for r in hist) == [
+        (0, 0.0, 24.75, 25),
+        (1, 24.75, 49.5, 25),
+        (2, 49.5, 74.25, 25),
+        (3, 74.25, 99.0, 25),
+    ]
 
 
 def test_rank_arm_tolerates_non_numeric_shuffle_partitions(spark, monkeypatch):
