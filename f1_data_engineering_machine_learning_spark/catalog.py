@@ -95,35 +95,31 @@ def query(name: str, oracle: str | None = None):
 
 
 #: Queries surfaced FIRST by ``queries()``. The external correctness
-#: gate snapshots the first 50 entries in iteration order; rounds 1-12
-#: hard-verified every oracled entry at least once (only the rows-only
-#: embedding_lsh_topk stays out by design). Round 13 rotates the gate
-#: an eleventh time, MACHINE-DERIVED via tools/gate_basis.py: exactly
-#: the first 50 oracled queries sorted by (newest driver round with a
-#: CORRECTNESS row, name), computed from the committed
-#: CORRECTNESS_r01..r12.json files and snapshotted in
-#: GATE_BASIS_r13.json (repo root). tests/test_catalog.py::
+#: gate snapshots the first 50 entries in iteration order; every oracled
+#: entry has been hard-verified at least once (only the rows-only
+#: embedding_lsh_topk stays out by design). The gate rotates by evidence
+#: freshness, MACHINE-DERIVED via tools/gate_basis.py: exactly the first
+#: 50 oracled queries sorted by (newest driver round with a CORRECTNESS
+#: row, name), computed from the committed CORRECTNESS_r*.json files and
+#: snapshotted in GATE_BASIS_r13.json (repo root). tests/test_catalog.py::
 #: test_gate_priority_queries_in_first_50 recomputes the set from that
 #: basis file and fails on any drift. Slots 1-2 are the two queries
-#: added after the r12 rotation (never driver-gated); slots 3-5 the
-#: r8-evidence tier; slots 6-50 the 45 alphabetically-first r9-tier
-#: entries — which happens to re-gate this round's restructured
-#: rank-arm queries (lineitem_price_equidepth_hist_ranked,
-#: lineitem_quantity_percentiles_ranked) on fresh driver evidence.
-#: embedding_lsh_topk stays past the cutoff by design: the catalog's
+#: added after the last rotation (never driver-gated); slots 3-5 the
+#: stalest-evidence tier; slots 6-50 the 45 alphabetically-first entries
+#: of the next-stalest tier. embedding_lsh_topk stays past the cutoff by design: the catalog's
 #: one rows-only entry (MLlib hyperplanes aren't SQL-reproducible; its
 #: recall contract is pytest-oracled), kept out so every gated row is
 #: a full value oracle. Everything not listed keeps registration
 #: (file) order behind these; total content is identical.
 _GATE_PRIORITY = [
-    # -- slots 1-2: never driver-gated (added after the r12 rotation) --
+    # -- slots 1-2: never driver-gated (added after the last rotation) --
     "lang_vocab_overlap_kmv",
     "order_price_mrl_quantiles",
-    # -- slots 3-5: the r8-evidence tier (stalest driver rows) --
+    # -- slots 3-5: the stalest-evidence tier --
     "user_state_cdc",
     "weekly_distinct_users_bitmap",
     "winsorized_quantity_stats",
-    # -- slots 6-50: the 45 alphabetically-first r9-tier entries --
+    # -- slots 6-50: the 45 alphabetically-first next-stalest entries --
     "benchmark_contamination_docs",
     "big_quantity_orders",
     "bigram_collocations",
@@ -2209,7 +2205,7 @@ def lang_kmv_distinct_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-LANGUAGE KMV distinct-doc estimates
     (dataops/sampling.py::grouped_bottomk_distinct_estimate, k=64) —
     the keyed member that completes the keyed summary family (keyed
-    CMS r9, keyed histogram r9, keyed sample r9): one (lang, n_seen,
+    CMS, keyed histogram, keyed sample): one (lang, n_seen,
     estimate) row per language off the k smallest per-group md5 hashes,
     WindowGroupLimit map-side k-filter, no global sort. Bit-replayable:
     the oracle re-derives hash, rank, and the (0,1] division
@@ -2344,7 +2340,7 @@ def order_price_mrl_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once; blocks GC-release with the DataFrame (bigram convention,
     # pinned by test_bigram_collocations_checkpoint_blocks_released)
     s = mrl_build(o, "value", k).localCheckpoint(eager=False)
-    # Round-13 note: merging the rank audit and the exact-percentile
+    # Merging the rank audit and the exact-percentile
     # truth into ONE aggregate (ests collected — or lazily pivoted — to
     # literals/columns, lo/hi as conditional sums next to the array
     # percentile) was built, value-verified equal, and A/B-measured at
@@ -3512,7 +3508,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic integer arithmetic the oracle replays exactly. Fully
     lazy (mixture_sample_lazy): the |domains|-row totals/threshold
     frames live inside the plan as broadcast joins — construction runs
-    zero jobs (round-3 verdict item; the eager collect survives in
+    zero jobs (the eager collect survives in
     mixture_sample as the dict-returning API twin, equivalence-tested)."""
     from f1_data_engineering_machine_learning_spark.dataops.sampling import (
         mixture_sample_lazy,
@@ -5571,9 +5567,8 @@ def bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     while log() would hash-drift on libm differences — callers can take
     the log client-side.
 
-    Plan shape (round-10 rework — this was the catalog's most
-    exchange-heavy plan at 24 exchanges because the unigram-count
-    subtree was recomputed for each of its three consumers): the corpus
+    Plan shape (recomputing the unigram-count subtree for each of its
+    three consumers costs 24 exchanges): the corpus
     is scanned ONCE, each doc exploding a single tagged array carrying
     both its adjacent-pair structs and its unigram structs, so ONE
     corpus-wide shuffle produces the combined (is_uni, w1, w2) count
@@ -6106,7 +6101,7 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     double EXPLICITLY (JVM decimal->double is correctly rounded; the
     oracle goes through VARCHAR so strtod correctly rounds too — at
     sf1 the scaled sums exceed 2^53, where DuckDB's direct
-    decimal->double double-rounds off by 1 ulp, caught by the round-10
+    decimal->double double-rounds off by 1 ulp, caught by an
     sf1 value sweep), then identical double arithmetic both engines."""
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-06-01").cast("timestamp"))
@@ -7466,7 +7461,7 @@ def temperature_mixture_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mixture_sample_lazy with alpha=0.5): totals, sqrt targets, scale
     and thresholds are all plan-resident broadcast frames — the eager
     two-collect version (totals + mixture_sample) ran jobs at
-    construction (round-3 verdict item)."""
+    construction."""
     from f1_data_engineering_machine_learning_spark.dataops.sampling import (
         mixture_sample_lazy,
     )
@@ -8470,7 +8465,7 @@ def order_price_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents so the nine decile boundaries interpolate on exact
     binary fractions (the catalog's cross-engine percentile rule); tie
     blocks land in the lower bin by the x > boundary count. The
-    boundary pass is ADAPTIVE (round 8): a distinct-count guard (one
+    boundary pass is ADAPTIVE: a distinct-count guard (one
     HLL scan) keeps bounded-cardinality columns like this one on the
     percentile map aggregate (1 row, broadcast) and routes
     unbounded-cardinality doubles to the two-pass range-partitioned
@@ -9644,7 +9639,7 @@ def signup_conversion_lag_quantiles(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# Round-4 additions: drift/statistics + multi-criteria curation operators
+# Drift/statistics + multi-criteria curation operators
 # ---------------------------------------------------------------------------
 
 def _benford_case_sql(total_expr: str) -> str:

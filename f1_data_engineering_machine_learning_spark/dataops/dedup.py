@@ -284,7 +284,7 @@ def minhash_dedup_pairs(
     re-shingle, exactly like the incremental twin
     (:func:`incremental_minhash_dedup_pairs`) — output unchanged
     (non-candidate shingles/sizes are dropped by the inner joins
-    anyway). The trade, measured round 12: when candidates are a small
+    anyway). The trade, as measured: when candidates are a small
     fraction of the corpus (the 100 TB production case) the verify
     shuffle shrinks from every (id, shingle) pair to candidates only —
     the dominant byte saving; on small/bench corpora it LENGTHENS the

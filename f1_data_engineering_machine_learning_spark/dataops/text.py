@@ -159,7 +159,7 @@ def shingles(col: Column | str, k: int = 3) -> Column:
     whitespace yields empty-string tokens, while every shingle-family
     oracle normalizes via ``trim(regexp_replace(lower(text), '\\s+',
     ' '))`` first — a latent cross-engine mismatch for padded documents
-    (round-4 advice; current testdata never pads).
+    (current testdata never pads).
 
     Construction shape: the token array is LET-BOUND once per row by a
     single-element ``transform`` wrapper (SQL expressions have no let;

@@ -11,7 +11,7 @@ OOMed the driver near scan 20, on a 31-row vocab). Checkpointing
 replaces the subtree with a scan, making every round's plan
 constant-size: the standard Pregel/GraphX/ALS practice.
 
-Fault-tolerance policy (the round-6 advisory theme): when the
+Fault-tolerance policy: when the
 SparkContext has a checkpoint dir configured, the cut is a RELIABLE
 ``checkpoint`` — executor loss recomputes from storage. Otherwise it
 falls back to ``localCheckpoint``, whose blocks are NOT replicated: on

@@ -42,7 +42,7 @@ def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> 
     ``defaultParallelism``) iff its current layout is narrower. Results are
     repartition-invariant; only task parallelism changes.
 
-    The narrowness check is PLAN-SIDE since round 13: estimated scan
+    The narrowness check is PLAN-SIDE: estimated scan
     splits = optimizer ``sizeInBytes`` / ``files.maxPartitionBytes``
     (the scan packer's own ratio, ignoring the per-file open-cost
     surcharge — an over-estimate of split size, i.e. an UNDER-estimate

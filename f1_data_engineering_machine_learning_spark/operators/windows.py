@@ -149,7 +149,7 @@ def range_partitioned_rank(
     # execution re-SAMPLES its range boundaries — the two branches then
     # disagree on partition membership and the offsets join assigns
     # wrong global ranks. Reproduced at sf0.1 as a nondeterministic
-    # 10-vs-11-row NTILE(10) result (round-4 sf0.1 oracle sweep);
+    # 10-vs-11-row NTILE(10) result (sf0.1 oracle sweep);
     # invisible at sf0.01 where the sampled boundaries coincide. Same
     # contract as the iterative-graph checkpoints in operators/graph.py.
     tagged = ranged.withColumn("__pid", F.spark_partition_id()).transform(lineage_cut)
@@ -227,7 +227,6 @@ def range_partitioned_rank(
         # the global row count rides the offsets broadcast already joined
         # onto every row — exposing it costs nothing, while the caller's
         # alternative is a SECOND full scan of the input just to count it
-        # (the shape _ingest's unkeyed arm paid before round 13)
         out = out.withColumn(total_col, F.col("__n").cast("long"))
     return out.drop("__pid", "__lo", "__hi", "__n", "__cnt")
 

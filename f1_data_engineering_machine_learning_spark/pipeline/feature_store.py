@@ -15,10 +15,10 @@ Column names match the reference byte-for-byte — including its
 ``avgPositioCurrentTemp`` typo (line 100), which downstream ML consumes as a
 feature name and therefore IS the contract.
 
-Entry points: ``driver_feature_snapshot`` (one date — the reference's unit
-of work, which ``IncrementalIngestor`` materializes date by date) and
-``driver_feature_store`` (many dates in one pass of the running-window
-engine; tested equal to the per-date snapshots unioned).
+Entry points: ``driver_feature_store`` (many dates in one pass of the
+running-window engine) and ``driver_feature_snapshot`` (one date, the
+reference's unit of work, which ``IncrementalIngestor`` materializes date
+by date). Both run the same engine; one date is ``[date]``.
 """
 
 from __future__ import annotations
@@ -39,7 +39,6 @@ from f1_data_engineering_machine_learning_spark.plans.snapshot import (
     scoped_count,
     scoped_median,
     scoped_sum,
-    snapshot_one,
     snapshot_single_pass,
     trailing,
 )
@@ -221,15 +220,14 @@ def _attach_round(fs: DataFrame, typed: DataFrame) -> DataFrame:
     )
 
 
-def driver_feature_snapshot(results: DataFrame, date: str) -> DataFrame:
-    """One snapshot date over the bronze ``results`` table — the unit the
-    reference's IngestorFS materializes per iteration."""
-    typed = typed_results(results)
-    return _attach_round(snapshot_one(typed, _spec(), date), typed)
-
-
 def driver_feature_store(results: DataFrame, dates: Sequence[str]) -> DataFrame:
     """All snapshot dates in one pass of per-entity running windows
     (plans/snapshot.py)."""
     typed = typed_results(results)
     return _attach_round(snapshot_single_pass(typed, _spec(), dates), typed)
+
+
+def driver_feature_snapshot(results: DataFrame, date: str) -> DataFrame:
+    """One snapshot date over the bronze ``results`` table — the unit the
+    reference's IngestorFS materializes per iteration."""
+    return driver_feature_store(results, [date])

@@ -7,32 +7,28 @@ per-date by its ``scripts/spark_ops.py:135-191``).
 
 A ``SnapshotSpec`` is declarative: each scope is a ``Scope`` (as-of,
 trailing interval, or current period) and each aggregate an ``Agg``
-(aggregate function plus its fact-side input column). Both execution paths
-derive from that one definition:
+(aggregate function plus its fact-side input column).
 
-- ``snapshot_one`` — the reference's unit of work: one aggregation for one
-  reference date over ``fact_date <= dtRef``, each scope a ``CASE WHEN``
-  restriction of its aggregate's input. ``IncrementalIngestor``
-  materializes it date by date.
+``snapshot_single_pass`` is the one engine, for one date or many: the
+reference's per-date unit is ``[date]``. It is a per-entity running-window
+engine. The facts are unioned with one marker row per (entity, snapshot
+date) inside the entity's active span, then every aggregate is evaluated
+as a window over the entity's rows ordered by date:
 
-- ``snapshot_single_pass`` — every date at once, a per-entity running-window
-  engine. The facts are unioned with one marker row per (entity, snapshot
-  date) inside the entity's active span, then every aggregate is evaluated
-  as a window over the entity's rows ordered by date:
+* as-of: ``RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW``;
+* trailing: ``RANGE BETWEEN INTERVAL ... PRECEDING AND CURRENT ROW``
+  (SQL interval bounds, so calendar arithmetic matches the reference's
+  ``dtRef - INTERVAL ...`` exactly, leap days included);
+* current period: the as-of frame, partitioned also by the period.
 
-  * as-of: ``RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW``;
-  * trailing: ``RANGE BETWEEN INTERVAL ... PRECEDING AND CURRENT ROW``
-    (SQL interval bounds, so calendar arithmetic matches the per-date
-    path's ``dtRef - INTERVAL ...`` exactly, leap days included);
-  * current period: the as-of frame, partitioned also by the period.
+Only the marker rows are kept. ``CURRENT ROW`` in a RANGE frame includes
+the marker's peers, i.e. the facts dated on the snapshot date itself.
+The work is O(facts + active entity-dates) rows, not O(facts x dates).
 
-  Only the marker rows are kept. ``CURRENT ROW`` in a RANGE frame includes
-  the marker's peers, i.e. the facts dated on the snapshot date itself.
-  The work is O(facts + active entity-dates) rows, not O(facts x dates).
-
-The marker grid is clipped per entity to dates on or after its first fact
-and, with an activity scope, to dates whose scope can still reach its last
-fact; the activity count stays the final test.
+The marker grid is one array literal of the snapshot dates, filtered per
+entity to dates on or after its first fact and, with an activity scope, to
+dates whose scope can still reach its last fact, then exploded: no join
+with a date dimension. The activity count stays the final test.
 
 NULL semantics: a scope with no rows must produce NULL for every aggregate
 (the reference gets this from its left-join miss on the per-scope
@@ -80,7 +76,7 @@ class Scope:
 
     def since(self, ref: Column, d: Column) -> Column:
         """Whether a fact dated ``d`` is on or after the scope's first day
-        at ``ref``: the scope's test inside the as-of gate."""
+        at ``ref``: the activity clip of the marker grid."""
         if self.kind == "trailing":
             return d >= ref - F.expr(f"INTERVAL {self.arg}")
         if self.kind == "period":
@@ -247,64 +243,34 @@ def _finish(out: DataFrame, spec: SnapshotSpec) -> DataFrame:
     )
 
 
-def snapshot_one(facts: DataFrame, spec: SnapshotSpec, date: str) -> DataFrame:
-    """One snapshot date — the reference's templated-SQL-per-date unit
-    (/root/reference/scripts/spark_ops.py:135-151)."""
-    aggs = _aggs(spec)
-    dt_ref = F.lit(str(date)).cast("date")
-    d = F.col(_DATE)
-    scope_names = list(spec.scopes)
-    rows, inputs = _inputs(facts, spec, aggs)
-    gated = (
-        rows.filter(d <= dt_ref)
-        .select(
-            "*",
-            *[
-                spec.scopes[name].since(dt_ref, d).alias(f"__s{j}")
-                for j, name in enumerate(scope_names)
-            ],
-        )
-    )
-    exprs = [
-        F.expr(
-            AGG_SQL[agg.fn].format(
-                f"IF(`__s{scope_names.index(scope)}`, `{a}`, NULL)"
-            )
-        ).alias(out_col)
-        for a, (out_col, scope, agg) in zip(inputs, aggs)
-    ]
-    out = gated.groupBy(*spec.entity_keys).agg(*exprs).withColumn(DT_REF, dt_ref)
-    return _finish(out, spec)
-
-
 def snapshot_single_pass(
     facts: DataFrame, spec: SnapshotSpec, dates: Sequence[str]
 ) -> DataFrame:
     """Every snapshot date in one pass of per-entity running windows
-    (module docstring); equal to ``snapshot_one`` per date, unioned."""
+    (module docstring); one date is ``[date]``."""
     aggs = _aggs(spec)
     keys = list(spec.entity_keys)
     rows, inputs = _inputs(facts, spec, aggs)
-    spark = facts.sparkSession
-    # explode of a literal array, not createDataFrame: keeps the dim
-    # inside Catalyst (Range -> Generate, whole-stage codegen) instead of
-    # a Scan ExistingRDD the optimizer treats as opaque. One SQL
-    # expression, not a Column per date: each Column is a py4j round trip
+    # one SQL literal, not a Column per date: each Column is a py4j
+    # round trip
     literals = ", ".join(f"DATE'{d}'" for d in dates)
-    dates_df = spark.range(1).select(
-        F.expr(f"explode(CAST(array({literals}) AS ARRAY<DATE>))").alias(DT_REF)
-    )
+    grid = F.expr(f"CAST(array({literals}) AS ARRAY<DATE>)")
 
     spans = rows.groupBy(*keys).agg(
         F.min(_DATE).alias("__first"), F.max(_DATE).alias("__last")
     )
-    ref = F.col(DT_REF)
-    clip = F.col("__first") <= ref
-    if spec.activity_scope is not None:
-        # an entity whose last fact precedes the activity scope is inactive
-        clip = clip & spec.scopes[spec.activity_scope].since(ref, F.col("__last"))
-    markers = spans.join(F.broadcast(dates_df), clip).select(
-        *keys, ref.alias(_DATE), F.lit(True).alias(_MARKER)
+
+    def clip(ref: Column) -> Column:
+        keep = F.col("__first") <= ref
+        if spec.activity_scope is not None:
+            # an entity whose last fact precedes the activity scope is inactive
+            keep = keep & spec.scopes[spec.activity_scope].since(ref, F.col("__last"))
+        return keep
+
+    markers = spans.select(
+        *keys,
+        F.explode(F.filter(grid, clip)).alias(_DATE),
+        F.lit(True).alias(_MARKER),
     )
     rows = rows.withColumn(_MARKER, F.lit(False)).unionByName(
         markers, allowMissingColumns=True

@@ -531,9 +531,8 @@ class VersionedTable:
 
     def _kept_rows(self, keep: list, stats: dict) -> int:
         """Row total of carried-over files, from manifest metadata when
-        every file carries the "__rows" footer count (all tables written
-        since round 11), falling back to one Spark count for manifests
-        predating it — maintenance commits must not re-scan untouched
+        every file carries the "__rows" footer count, falling back to one
+        Spark count for manifests written before files carried it — maintenance commits must not re-scan untouched
         data at 100 TB just to fill in ``n_rows``."""
         if not keep:
             return 0
@@ -837,7 +836,7 @@ class VersionedTable:
             for zi, zc in enumerate(eff_zorder):
                 dt = dtypes.get(zc)
                 sname = f"__zdict_{zi}"
-                # DATE/TIMESTAMP z-order columns (round-11): the (source,
+                # DATE/TIMESTAMP z-order columns: the (source,
                 # day) layout is THE canonical lake clustering shape, but
                 # date types don't cast to double for the quantizer —
                 # attach the order-preserving epoch surrogate instead
@@ -870,7 +869,7 @@ class VersionedTable:
                     .collect()
                 ]
                 if len(vals) > cap:
-                    # HIGH-CARDINALITY FALLBACK (round-11): above the
+                    # HIGH-CARDINALITY FALLBACK: above the
                     # exact-dictionary cap (URL hosts, doc sources at
                     # 100 TB), rank by SAMPLED LEX QUANTILES instead of
                     # erroring — same contiguous-lex-range file layout,

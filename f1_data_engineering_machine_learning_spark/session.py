@@ -88,7 +88,7 @@ def build_session(
         # generated-class cache thrashes, re-running Janino on every
         # re-execution of an evicted plan. 10k entries keeps every unit
         # of a full catalog session resident (metaspace cost is bounded:
-        # r12 measured 232 MB with the 100-entry cache and per-class
+        # 232 MB measured with the 100-entry cache and per-class
         # footprint is ~10-100 KB).
         .config(
             "spark.sql.codegen.cache.maxEntries",

@@ -573,7 +573,7 @@ def near_dup_ingest_stream(
     commit accretes one file set, and since this sink READS both tables
     every batch (fp anti-join, index equi-join, orphan sweep), per-batch
     wall otherwise follows total file count. Measured in the 120-batch
-    soak (PERF.md round 9): uncompacted per-batch wall grew ~1.4x over
+    soak (PERF.md): uncompacted per-batch wall grew ~1.4x over
     120 batches purely from file accretion; with compact_every=10 it is
     trend-flat. Off by default, same cadence contract as
     ``dedup_ingest_stream``.
@@ -1009,8 +1009,8 @@ def weighted_sample_ingest_stream(
 ):
     """Continuous WEIGHTED sample maintenance — the streaming twin of
     ``dataops/sampling.py::weighted_sample`` (Efraimidis-Spirakis A-ES),
-    completing the sampling family's streaming column (uniform bottom-k
-    landed in r9). The A-ES sample key ``u^(1/w)`` is a pure function of
+    completing the sampling family's streaming column (next to uniform
+    bottom-k). The A-ES sample key ``u^(1/w)`` is a pure function of
     row content (Knuth-hash uniform from the integer key, weight from
     the row), so top-k by it is MERGEABLE exactly like bottom-k:
     ``topk(A ∪ B) == topk(topk(A) ∪ topk(B))``, each batch folds in

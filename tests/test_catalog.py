@@ -76,19 +76,19 @@ def test_dedup_keep_last_is_max_ts(spark, sf_dir):
 
 def test_gate_priority_queries_in_first_50():
     """The external correctness gate snapshots the first 50 queries() in
-    iteration order. Round 13 rotates by EVIDENCE FRESHNESS (the
-    standing convention since r10); the rotation is MACHINE-DERIVED:
+    iteration order. The gate rotates by EVIDENCE FRESHNESS; the
+    rotation is MACHINE-DERIVED:
     GATE_BASIS_r13.json snapshots, for every oracled
     query in the catalog at rotation time, the newest driver round with
     a CORRECTNESS row (0 = never gated). The intended gate is exactly
     the first 50 of that basis sorted by (last_round, name). This test
     (a) re-validates the basis file against the committed
-    CORRECTNESS_r01..r12.json files, (b) recomputes the gate from the
+    CORRECTNESS_r*.json files, (b) recomputes the gate from the
     basis and asserts ``_GATE_PRIORITY`` matches, and (c) asserts the
     gate occupies iteration positions 0-49 of ``queries()`` — so a
-    hand-editing mistake can no longer silently waste a round of driver
-    evidence. Queries added AFTER the rotation are deliberately outside
-    the basis (they queue for the r14 gate, the standing convention)."""
+    hand-editing mistake can no longer silently waste driver evidence.
+    Queries added AFTER the rotation are deliberately outside the basis
+    (they queue for the next rotation)."""
     import glob
     import json
     import re
@@ -113,7 +113,7 @@ def test_gate_priority_queries_in_first_50():
         assert q in oracles, f"basis entry {q} is not an oracled query"
         assert newest.get(q, 0) == r, f"basis says r{r} for {q}, files say r{newest.get(q, 0)}"
     # every oracled query present at rotation time is in the basis;
-    # post-rotation additions (r12 queue) are the only permitted gap
+    # post-rotation additions are the only permitted gap
     for q in newest:
         if q in oracles:
             assert q in basis, f"{q} has driver evidence but is missing from the basis"
@@ -134,13 +134,13 @@ def test_gate_priority_queries_in_first_50():
     for n in names[:n_slots]:
         assert n in oracles, f"{n} in the 50-slot gate without a value oracle"
     assert "embedding_lsh_topk" not in names[:n_slots]
-    # slots 1-2: the two queries added after the r12 rotation — their
+    # slots 1-2: the two queries added after the last rotation — their
     # newest driver row is 0 (never gated), so staleness puts them first
     assert set(names[:2]) == {
         "lang_vocab_overlap_kmv",
         "order_price_mrl_quantiles",
     }
-    # cumulative: after a green r12 gate only the rows-only entry and
+    # cumulative: after a green gate only the rows-only entry and
     # post-rotation additions lack driver evidence
     ungated = {q for q in catalog._QUERIES if newest.get(q, 0) == 0}
     assert ungated - set(names[:n_slots]) - {"embedding_lsh_topk"} <= (
@@ -202,7 +202,7 @@ def test_all_queries_execute_under_ansi_session(spark, sf_dir):
 
 
 def test_bigram_collocations_checkpoint_blocks_released(spark, sf_dir):
-    """Round-12 advisory-loop closer: bigram_collocations caches its
+    """bigram_collocations caches its
     combined count table with localCheckpoint(eager=False); the
     docstring argues the ContextCleaner frees those blocks once the
     returned DataFrame is garbage-collected (unlike a persist(), which

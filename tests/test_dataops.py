@@ -64,7 +64,7 @@ def test_shingles(spark):
 
 
 def test_shingles_trim_padded_text(spark):
-    # round-4 advice regression: padded whitespace must not mint
+    # regression: padded whitespace must not mint
     # empty-string tokens — shingles match the oracle family's
     # trim(regexp_replace(...)) normalization
     df = spark.createDataFrame([("  a b c d \n",), ("a b c d",)], ["text"])

@@ -24,7 +24,8 @@ from tests.util_compare import assert_frames_equal
 def test_golden_parity_holds_for_other_seeds(spark):
     """The DuckDB golden parity must not be seed-luck: re-run champions +
     one feature snapshot on a fixture with a different seed."""
-    from tests.test_pipeline import CHAMPIONS_ORACLE, _fs_oracle
+    from f1_data_engineering_machine_learning_spark.pipeline import oracle
+    from tests.test_pipeline import CHAMPIONS_ORACLE
 
     df = results_fixture(spark, seed=1234)
     con = duckdb.connect()
@@ -35,7 +36,7 @@ def test_golden_parity_holds_for_other_seeds(spark):
     date = "2022-09-01"
     assert_frames_equal(
         driver_feature_snapshot(df, date).toPandas(),
-        con.sql(_fs_oracle(date)).df(),
+        con.sql(f"SELECT * FROM {oracle._fs_snapshot_sql(date)}").df(),
         f"fs@{date}@seed1234",
     )
 

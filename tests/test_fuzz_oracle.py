@@ -183,7 +183,7 @@ def test_random_window_query_matches_duckdb(spark, seed):
 
 
 # ---------------------------------------------------------------------------
-# Graph / mining fuzz (round-4 verdict item 7): random structures vs
+# Graph / mining fuzz: random structures vs
 # pure-Python reference implementations. Triangles and PageRank batch 100
 # random graphs each into ONE Spark call by giving every graph a disjoint
 # node-id space (no cross edges => the union's result is the union of the

@@ -99,7 +99,7 @@ def test_maintained_view_composes_with_versioned_history(spark, tmp_path):
 
 
 def test_streaming_cms_maintained_in_versioned_table(spark, tmp_path):
-    """Three round-4 systems composed: a token stream maintains a
+    """Three systems composed: a token stream maintains a
     count-min sketch as a versioned materialized view — per-batch
     sketch partials CELL-ADD into the stored sketch inside foreachBatch,
     committed with the txn/appId protocol. The maintained sketch must

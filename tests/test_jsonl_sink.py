@@ -152,7 +152,7 @@ def _mk_writer_with_staged(out, j=0, n=2):
 
 
 def test_lock_timeout_promotes_nothing(tmp_path):
-    """ADVICE r5: all-or-nothing under lock contention. A commit that
+    """All-or-nothing under lock contention. A commit that
     cannot take the manifest lock must raise BEFORE promoting any shard
     — no committed-looking .jsonl files that no manifest records."""
     out = str(tmp_path / "out")
@@ -194,7 +194,7 @@ def test_stale_lock_is_stolen_and_commit_proceeds(tmp_path):
 
 
 def test_release_only_removes_own_lock(tmp_path):
-    """ADVICE r5: a displaced holder must not unlink a thief's fresh
+    """A displaced holder must not unlink a thief's fresh
     lock — release re-verifies the owner id before removing."""
     from f1_data_engineering_machine_learning_spark.sources.jsonl_sink import (
         JsonlShardWriter,
@@ -215,7 +215,7 @@ def test_release_only_removes_own_lock(tmp_path):
 
 
 def test_steal_threshold_exceeds_waiter_deadline_is_false():
-    """ADVICE r5: the steal threshold must be substantially below the
+    """The steal threshold must be substantially below the
     waiter deadline so crash recovery fires before waiters give up, and
     far above any plausible critical-section duration."""
     from f1_data_engineering_machine_learning_spark.sources.jsonl_sink import (

@@ -248,7 +248,7 @@ def test_text_classifier_separable(spark):
 
 
 def test_strip_training_summary_leaves_has_summary_false(spark):
-    """Regression (round-4 advice): stripping must clear the summary to
+    """Regression: stripping must clear the summary to
     Scala Option.empty(), not a raw null — a null Option makes a later
     model.hasSummary throw NullPointerException instead of returning
     False."""

@@ -753,7 +753,7 @@ def test_fuzz_assign_sessions_matches_python_replay(spark):
 
 
 def test_ensure_min_parallelism_plan_side_heuristic(spark):
-    """Round-13 rewrite: the narrowness check reads optimizer stats (no
+    """The narrowness check reads optimizer stats (no
     RDD conversion). Small inputs still widen to defaultParallelism;
     inputs whose estimated split count reaches the target short-circuit
     with NO added exchange; explicit min_partitions is honored."""

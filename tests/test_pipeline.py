@@ -7,13 +7,13 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from f1_data_engineering_machine_learning_spark.operators.reshape import union_all
 from f1_data_engineering_machine_learning_spark.pipeline import (
     abt_champions,
     champions,
     driver_feature_snapshot,
     driver_feature_store,
     event_dates,
+    oracle,
 )
 from f1_data_engineering_machine_learning_spark.pipeline.fixtures import results_fixture
 from tests.util_compare import assert_frames_equal
@@ -31,120 +31,6 @@ WITH t1 AS (
   FROM t1
 )
 SELECT * FROM t2 WHERE rn_driver = 1
-"""
-
-
-def _fs_oracle(date: str) -> str:
-    """Faithful DuckDB translation of
-    /root/reference/sql/feature_store_drivers.sql for one snapshot date:
-    PERCENTILE -> quantile_cont, INT(FLOAT(x)) -> TRY_CAST chain,
-    TO_DATE(TO_TIMESTAMP(x)) -> CAST chain; structure (4 CTEs + joins)
-    preserved."""
-    metrics = []
-    for suffix, extra_where in (
-        ("", ""),
-        ("1Year", f"AND dtEvent >= (DATE '{date}' - INTERVAL 1 YEAR)"),
-        ("CurrentTemp", f"AND YEAR(dtEvent) >= YEAR(DATE '{date}')"),
-    ):
-        cols = []
-        if suffix == "":
-            cols += [
-                "COUNT(*) AS qtdRuns",
-                "SUM(CASE WHEN identifier = 'race' THEN 1 ELSE 0 END) AS qtdRace",
-                "SUM(CASE WHEN identifier = 'sprint' THEN 1 ELSE 0 END) AS qtdSprint",
-            ]
-        for base, val in (
-            ("Position", "Position"),
-            ("PositionRace", "Position"),
-            ("PositionSprint", "Position"),
-            ("GridPosition", "GridPosition"),
-            ("GridPositionRace", "GridPosition"),
-            ("GridPositionSprint", "GridPosition"),
-            ("PositionGain", "GridPosition - Position"),
-            ("PositionRaceGain", "GridPosition - Position"),
-            ("PositionSprintGain", "GridPosition - Position"),
-        ):
-            if base.endswith("Race") or "Race" in base:
-                expr = f"CASE WHEN identifier = 'race' THEN {val} END"
-            elif "Sprint" in base:
-                expr = f"CASE WHEN identifier = 'sprint' THEN {val} END"
-            else:
-                expr = val
-            name = f"avg{base}{suffix}"
-            if (base, suffix) == ("PositionGain", "CurrentTemp"):
-                name = "avgPositioCurrentTemp"  # the reference's typo, line 100
-            cols.append(f"AVG({expr}) AS {name}")
-        for base, val in (
-            ("Position", "Position"),
-            ("PositionRace", "Position"),
-            ("PositionSprint", "Position"),
-            ("GridPosition", "GridPosition"),
-            ("GridPositionRace", "GridPosition"),
-            ("GridPositionSprint", "GridPosition"),
-            ("PositionGain", "GridPosition - Position"),
-            ("PositionRaceGain", "GridPosition - Position"),
-            ("PositionSprintGain", "GridPosition - Position"),
-        ):
-            if "Race" in base:
-                expr = f"CASE WHEN identifier = 'race' THEN {val} END"
-            elif "Sprint" in base:
-                expr = f"CASE WHEN identifier = 'sprint' THEN {val} END"
-            else:
-                expr = val
-            cols.append(f"quantile_cont({expr}, 0.5) AS median{base}{suffix}")
-        cols += [
-            f"SUM(CASE WHEN Position = 1 THEN 1 ELSE 0 END) AS qtdeWins{suffix}",
-            f"SUM(CASE WHEN Position <= 3 THEN 1 ELSE 0 END) AS qtdePodiums{suffix}",
-            f"SUM(CASE WHEN GridPosition = 1 THEN 1 ELSE 0 END) AS qtdePoles{suffix}",
-        ]
-        if suffix == "CurrentTemp":
-            cols.append("SUM(CAST(Points AS DOUBLE)) AS totalPointsCurrentTemp")
-        metrics.append((suffix, extra_where, ",\n           ".join(cols)))
-
-    life_cols, year_cols, cur_cols = metrics[0][2], metrics[1][2], metrics[2][2]
-    return f"""
-WITH tb_results AS (
-    SELECT DriverId, identifier, Points,
-           COALESCE(TRY_CAST(TRY_CAST(Position AS DOUBLE) AS INTEGER), 99) AS Position,
-           COALESCE(TRY_CAST(TRY_CAST(GridPosition AS DOUBLE) AS INTEGER), 99) AS GridPosition,
-           CAST(CAST(date AS TIMESTAMP) AS DATE) AS dtEvent,
-           RoundNumber
-    FROM results
-    WHERE CAST(CAST(date AS TIMESTAMP) AS DATE) <= DATE '{date}'
-),
-tb_event AS (SELECT DISTINCT dtEvent, RoundNumber FROM tb_results),
-tb_drivers AS (
-    SELECT DISTINCT DriverId FROM tb_results
-    WHERE dtEvent >= (DATE '{date}' - INTERVAL 1 YEAR)
-),
-tb_agg_life AS (
-    SELECT DriverId, MAX('{date}') AS dtRef,
-           YEAR(DATE '{date}') AS dtYear,
-           {life_cols}
-    FROM tb_results
-    WHERE DriverId IN (SELECT DriverId FROM tb_drivers)
-    GROUP BY DriverId
-),
-tb_agg_last_year AS (
-    SELECT DriverId, {year_cols}
-    FROM tb_results
-    WHERE DriverId IN (SELECT DriverId FROM tb_drivers)
-      {metrics[1][1]}
-    GROUP BY DriverId
-),
-tb_agg_current_temp AS (
-    SELECT DriverId, {cur_cols}
-    FROM tb_results
-    WHERE DriverId IN (SELECT DriverId FROM tb_drivers)
-      {metrics[2][1]}
-    GROUP BY DriverId
-)
-SELECT t4.RoundNumber AS tempRoundNumber, t1.*,
-       t2.* EXCLUDE (DriverId), t3.* EXCLUDE (DriverId)
-FROM tb_agg_life t1
-LEFT JOIN tb_agg_last_year t2 ON t1.DriverId = t2.DriverId
-LEFT JOIN tb_agg_current_temp t3 ON t1.DriverId = t3.DriverId
-LEFT JOIN tb_event t4 ON CAST(t1.dtRef AS DATE) = t4.dtEvent
 """
 
 
@@ -168,16 +54,26 @@ def test_champions_matches_reference_sql(f1):
     "date", ["2021-06-20", "2022-03-05", "2023-07-15", "2023-11-01"]
 )
 def test_feature_snapshot_matches_reference_sql(f1, date):
+    """The per-date path against the reference SQL replayed in DuckDB
+    (pipeline/oracle.py), independent of the snapshot engine."""
     got = driver_feature_snapshot(f1["df"], date).toPandas()
-    want = f1["con"].sql(_fs_oracle(date)).df()
+    want = f1["con"].sql(f"SELECT * FROM {oracle._fs_snapshot_sql(date)}").df()
     assert_frames_equal(got, want, f"feature_store@{date}")
     assert len(got) > 0
 
 
 def test_loop_and_single_pass_agree(f1):
-    # reference: one per-date snapshot aggregation per date, unioned
+    # reference: one per-date group-by aggregation per date, unioned
+    from f1_data_engineering_machine_learning_spark.pipeline.feature_store import (
+        _attach_round,
+        _spec,
+        typed_results,
+    )
+    from tests.snapshot_reference import snapshot_loop
+
     dates = ["2022-03-05", "2022-07-01", "2023-07-15"]
-    a = union_all([driver_feature_snapshot(f1["df"], d) for d in dates]).toPandas()
+    typed = typed_results(f1["df"])
+    a = _attach_round(snapshot_loop(typed, _spec(), dates), typed).toPandas()
     b = driver_feature_store(f1["df"], dates).toPandas()
     assert_frames_equal(a, b, "loop-vs-single-pass")
 
@@ -215,6 +111,29 @@ def test_incremental_ingest_equals_single_pass_store(f1, tmp_path):
     want = driver_feature_store(f1["df"], dates).toPandas()
     assert_frames_equal(got, want, "incremental-vs-single-pass")
     assert sorted(set(got["dtRef"])) == dates
+
+
+def test_snapshot_job_counts(f1, tmp_path, spark):
+    """Job budgets of the snapshot engine: a store write over three dates
+    and one ingested date (the same engine on ``[date]``) each run 5
+    jobs. The marker grid is an exploded literal, so no job broadcasts a
+    date dimension."""
+    from f1_data_engineering_machine_learning_spark.plans import IncrementalIngestor
+    from tests.util_jobs import jobs_launched
+
+    dates = ["2022-03-05", "2022-07-01", "2023-07-15"]
+    _, jobs = jobs_launched(
+        spark,
+        lambda: driver_feature_store(f1["df"], dates)
+        .write.mode("overwrite")
+        .parquet(str(tmp_path / "store")),
+    )
+    assert jobs == 5
+    ing = IncrementalIngestor(
+        lambda d: driver_feature_snapshot(f1["df"], d), str(tmp_path / "fs")
+    )
+    _, jobs = jobs_launched(spark, lambda: ing.exec(["2022-07-01"]))
+    assert jobs == 5
 
 
 def test_abt_labels(f1):

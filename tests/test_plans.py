@@ -214,7 +214,7 @@ def test_compaction_merges_small_files(spark, tmp_path):
 
 
 def test_mixture_catalog_entries_construct_lazily(spark):
-    """Round-3 verdict: catalog entries should not run Spark jobs at
+    """Catalog entries should not run Spark jobs at
     DataFrame-construction time unless the algorithm inherently needs a
     driver-side scalar (MLlib fit / BPE per-round argmax / quantizer
     collect — each documented at its site). The mixture queries were the
@@ -306,7 +306,7 @@ def test_entire_catalog_global_windows_are_bounded_whitelisted(spark):
     An unlisted global window sorts its whole input in one task at
     100 TB; the two real ones this sweep found (weighted_doc_sample's
     A-ES top-k, sole_returning_supplier's top-10) were rewritten to
-    TakeOrderedAndProject in round 7. The whitelist is also checked for
+    TakeOrderedAndProject. The whitelist is also checked for
     staleness: a listed query that no longer plans a global window must
     be delisted."""
     import importlib.util
@@ -336,7 +336,7 @@ def test_entire_catalog_global_windows_are_bounded_whitelisted(spark):
 
 
 def test_equidepth_rank_tail_reuses_ranged_materialization(spark, sf_dir):
-    """The rank-arm equidepth query's RETURNED frame (round-13 shape):
+    """The rank-arm equidepth query's RETURNED frame:
     the count pass reuses the range pass's lineage-cut materialization of
     the cast column — Scan ExistingRDD, ZERO parquet re-scans — and bins
     with a codegen'd chain of DRIVER-LITERAL comparisons: no broadcast

@@ -1,6 +1,7 @@
 """Property: per-date snapshots unioned (``snapshot_loop``, the test-side
-reference) == single-pass (window engine) on randomized fact tables and on
-the calendar edge cases, with ANSI on and off."""
+reference in ``tests/snapshot_reference.py``) == the window engine on
+randomized fact tables and on the calendar edge cases, with ANSI on and
+off."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from f1_data_engineering_machine_learning_spark.operators.reshape import union_all
 from f1_data_engineering_machine_learning_spark.plans.snapshot import (
     SnapshotSpec,
     asof,
@@ -18,17 +18,11 @@ from f1_data_engineering_machine_learning_spark.plans.snapshot import (
     scoped_count,
     scoped_median,
     scoped_sum,
-    snapshot_one,
     snapshot_single_pass,
     trailing,
 )
+from tests.snapshot_reference import snapshot_loop
 from tests.util_compare import assert_frames_equal
-
-
-def snapshot_loop(facts, spec: SnapshotSpec, dates):
-    """The reference for the window engine: one ``snapshot_one``
-    aggregation per date, unioned."""
-    return union_all([snapshot_one(facts, spec, d) for d in dates])
 
 
 @pytest.fixture(params=[False, True], ids=["ansi_off", "ansi_on"])
@@ -127,7 +121,14 @@ def _edge_facts(spark):
 
 
 def test_loop_equals_single_pass_calendar_edges(spark, ansi):
-    a, b = _both(_edge_facts(spark), _spec("year1"), _EDGE_DATES)
+    facts = _edge_facts(spark)
+    # one date (the per-date ingest unit), no dates, and a date before
+    # every fact
+    for dates in (["2024-02-29"], [], ["2022-01-01"]):
+        a, b = _both(facts, _spec("year1"), dates)
+        assert_frames_equal(a, b, f"snapshot-edges {dates} ansi={ansi}")
+        assert len(b) == (3 if dates == ["2024-02-29"] else 0), dates
+    a, b = _both(facts, _spec("year1"), _EDGE_DATES)
     assert_frames_equal(a, b, f"snapshot-edges ansi={ansi}")
     got = {(r.k, r.dtRef): r for r in b.itertuples()}
     # peers on the snapshot date are in every scope

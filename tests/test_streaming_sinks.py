@@ -893,8 +893,7 @@ def test_misra_gries_ingest_stream_keyed_per_group(spark, tmp_path):
 
 
 def test_misra_gries_ingest_stream_domain_guards(spark, tmp_path):
-    """Hostile-input guards at the MG ingest seam (round-12 advisory
-    fixes): (1) rows whose item collides with the reserved accounting
+    """Hostile-input guards at the MG ingest seam: (1) rows whose item collides with the reserved accounting
     key ('__mg_decr__') are DROPPED — they may not corrupt a stored
     count or the error bound D; (2) rows with NULL group keys are
     dropped explicitly (the threshold join is null-unsafe, so without

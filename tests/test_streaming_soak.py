@@ -1,6 +1,5 @@
-"""Sustained-load soaks for the ingest-maintenance streams (round-9
-verdict tasks 2 and 6): 100+ micro-batches through the dedup-on-ingest
-sinks and the mergeable-sketch streams at production state size,
+"""Sustained-load soaks for the ingest-maintenance streams: 100+
+micro-batches through the dedup-on-ingest sinks and the mergeable-sketch streams at production state size,
 asserting per-batch cost stays TREND-FLAT — bounded by batch size plus
 summary-sized merges, never by accumulated history.
 
@@ -40,8 +39,8 @@ def _soak(spark, tmp_path, mode: str, docs_per_batch: int) -> dict:
     """One soak run, with a single retry if the TREND assertion would
     fail: trend_ratio is a pure timing ratio, and a co-scheduled heavy
     test late in a 35-minute full-suite run can skew the last-quarter
-    median on an otherwise flat stream (observed once, round 11 — the
-    same test passes in isolation). A retry in a fresh directory
+    median on an otherwise flat stream (observed once; the same test
+    passes in isolation). A retry in a fresh directory
     distinguishes persistent history-following cost (fails BOTH runs,
     still reported) from one-off box contention; every non-timing
     assertion (state size, mass conservation, bitwise equivalence)
@@ -57,7 +56,7 @@ def _soak(spark, tmp_path, mode: str, docs_per_batch: int) -> dict:
         # The first run's ratio is kept in the returned dict
         # (first_trend_ratio) so persistent near-threshold drift stays
         # visible in soak artifacts instead of being discarded by the
-        # retry (round-12 advisory).
+        # retry.
         first_ratio = r["trend_ratio"]
         retry_dir = tmp_path / "retry"
         retry_dir.mkdir(exist_ok=True)
@@ -103,7 +102,7 @@ def test_near_dup_ingest_soak_trend_flat(spark, tmp_path):
     band-index equi-join, and the key-only orphan sweep, and compaction
     keeps read planning from following accreted file count (the
     uncompacted 120-batch soak measured ~1.4x per-batch drift from file
-    accretion alone; PERF.md round 9)."""
+    accretion alone; PERF.md)."""
     from f1_data_engineering_machine_learning_spark.plans.versioned import (
         VersionedTable,
     )
@@ -152,12 +151,12 @@ def test_sample_stream_soak_state_exactly_k(spark, tmp_path):
 
 
 def test_keyed_histogram_stream_soak_1200_keys(spark, tmp_path):
-    """Keyed-summary soak at REALISTIC key cardinality (round-10 verdict
-    item 5): histogram_ingest_stream(key_cols=) over 1,200 keys x
+    """Keyed-summary soak at REALISTIC key cardinality:
+    histogram_ingest_stream(key_cols=) over 1,200 keys x
     unit-width buckets on [0,20) for 100+ batches. State is keys x
     buckets (~24k rows, an order of magnitude over a batch delta), so a
     merge that followed history or exploded per-key would show here
-    where the r9 handful-of-keys soak could not. Asserts trend-flat
+    where a handful-of-keys soak could not. Asserts trend-flat
     per-batch cost, the store-size formula (<= keys x 20 buckets, every
     bucket id in [0,20)), and mass conservation: the summed counts
     equal every row ever ingested."""
@@ -215,7 +214,7 @@ def test_keyed_sample_stream_soak_1000_groups(spark, tmp_path):
 
 
 def test_weighted_sample_stream_soak_state_exactly_k(spark, tmp_path):
-    """Weighted A-ES sample soak (round-10 verdict item 4): 100+
+    """Weighted A-ES sample soak: 100+
     batches through weighted_sample_ingest_stream. Asserts trend-flat
     per-batch cost, state exactly k rows, and the headline merge
     contract at soak depth: the maintained store bitwise-equals the
@@ -309,9 +308,9 @@ def test_misra_gries_stream_soak_state_bounded(spark, tmp_path):
 
 
 def test_misra_gries_keyed_stream_soak_realistic_key_width(spark, tmp_path):
-    """Round-12 verdict task 3: keyed MG soak at the key width its
+    """Keyed MG soak at the key width its
     summary-family siblings run at — 1,000 groups x k=8 over 100+
-    batches (the r11 soak used 200 unkeyed rows/batch). Asserts
+    batches (not 200 unkeyed rows/batch). Asserts
     trend-flat per-batch cost, the groups x (k+1) state formula, every
     group's own decrement row within the classical n_g/(k+1) bound, and
     the per-group planted ~35%-share heavy hitter present."""
@@ -369,7 +368,7 @@ def test_misra_gries_keyed_stream_soak_realistic_key_width(spark, tmp_path):
 
 
 def test_mrl_quantile_stream_soak_drifting_domain(spark, tmp_path):
-    """Round-12 addition: soak the MRL quantile-ladder stream (keyed,
+    """Soak the MRL quantile-ladder stream (keyed,
     200 groups x k=16) under a DRIFTING value domain — the case the
     fixed-range histogram stream cannot serve. Asserts trend-flat
     per-batch cost, the k x (levels+2) per-group state formula, exact

@@ -42,7 +42,7 @@ def test_normalize_unicode_nfc_matches_duckdb_and_composes(spark):
 
 
 def test_nfc_normalized_fixture_catalog_oracle(spark):
-    """The round-10 committed-fixture NFC catalog query matches its
+    """The committed-fixture NFC catalog query matches its
     DuckDB oracle cell-for-cell (the value-oracle path the driver
     runs), and the fixture genuinely exercises rewrites: at least five
     rows changed, the ligature row did not, the two mark-order rows

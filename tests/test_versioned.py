@@ -452,7 +452,7 @@ def test_vacuum_grace_period_spares_inflight_files(spark, tmp_path):
 
 
 def test_append_schema_enforced_and_carried_forward(spark, tmp_path):
-    """ADVICE r5: append must NOT flip the manifest's stored table
+    """Append must NOT flip the manifest's stored table
     schema. A matching append (even with reordered columns) carries the
     parent schema forward; a mismatched append is rejected (Delta-style
     schema enforcement) and leaves the table untouched."""
@@ -880,7 +880,7 @@ def test_compact_zorder_quantize_requires_zorder_by(spark, tmp_path):
 
 
 def test_fuzz_multiwriter_mixed_ops_every_version_consistent(spark, tmp_path):
-    """Randomized multi-writer CAS stress (round-10): six real threads
+    """Randomized multi-writer CAS stress: six real threads
     run a seeded mix of append / overwrite / compact against ONE table.
     Whatever the interleaving, every committed version must be a
     consistent snapshot: versions are unique and contiguous, the parent
@@ -987,7 +987,7 @@ def test_fuzz_multiwriter_mixed_ops_every_version_consistent(spark, tmp_path):
 
 
 def test_compact_zorder_string_column_dictionary_rank(spark, tmp_path):
-    """Z-order over a STRING column (round-10): the lex-sorted
+    """Z-order over a STRING column: the lex-sorted
     dictionary-rank surrogate must (a) leave row content identical,
     (b) restore the exact table schema (no surrogate leakage), and
     (c) produce files holding contiguous lex ranges so a string
@@ -1039,8 +1039,8 @@ def test_compact_zorder_string_column_dictionary_rank(spark, tmp_path):
 
 
 def test_compact_zorder_string_high_cardinality_sampled_boundaries(spark, tmp_path):
-    """A string z-order column beyond 65,536 distinct values (round-11:
-    previously a hard error) falls back to sampled lex-quantile
+    """A string z-order column beyond 65,536 distinct values (not a
+    hard error) falls back to sampled lex-quantile
     boundaries — 256 equi-depth buckets from a deterministic
     hash-ordered sample, no full dictionary. The compacted files must
     still (a) hold every row with the exact table schema and (b) hold
@@ -1067,7 +1067,7 @@ def test_compact_zorder_string_high_cardinality_sampled_boundaries(spark, tmp_pa
 
 
 def test_compact_zorder_string_null_sentinel_rank(spark, tmp_path):
-    """NULL values in a string z-order column (round-11, advisory fix):
+    """NULL values in a string z-order column:
     the dictionary join must not leave a NULL surrogate/z-key — NULLs
     take sentinel rank -1, below every real rank, so they survive the
     rewrite and collapse deterministically into the z-low files."""
@@ -1129,7 +1129,7 @@ def test_compact_zorder_string_fallback_nulls_and_skew(spark, tmp_path):
 
 
 def test_compact_zorder_date_and_timestamp_columns(spark, tmp_path):
-    """Z-order over DATE / TIMESTAMP columns (round-11): the (source,
+    """Z-order over DATE / TIMESTAMP columns: the (source,
     day) layout is the canonical lake clustering shape, but date types
     don't cast to double for the Morton quantizer — an epoch surrogate
     (unix_date / unix_micros, order-preserving) must make both a date
@@ -1167,11 +1167,11 @@ def test_compact_zorder_date_and_timestamp_columns(spark, tmp_path):
 
 
 def test_manifest_per_file_rows_and_metadata_accounting(spark, tmp_path):
-    """Round-11: every written file carries its footer row count in the
+    """Every written file carries its footer row count in the
     manifest ("__rows"), n_rows always equals their sum, and
     maintenance commits (replace_where / merge_upsert) account for
     carried-over files from that metadata — with a working count
-    fallback for pre-round-11 manifests that lack it."""
+    fallback for older manifests that lack it."""
     import json as _json
 
     t = VersionedTable(spark, str(tmp_path / "t"))
@@ -1197,7 +1197,7 @@ def test_manifest_per_file_rows_and_metadata_accounting(spark, tmp_path):
     assert m2["n_rows"] == 1010
     assert sum(m2["stats"][f]["__rows"] for f in m2["files"]) == 1010
 
-    # fallback: a manifest stripped of __rows (pre-round-11 shape) still
+    # fallback: a manifest stripped of __rows (the older shape) still
     # replace_where's correctly via the one-count fallback
     mpath = t._mdir + f"/v{2:08d}.json"
     m = _json.load(open(mpath))
@@ -1214,8 +1214,8 @@ def test_manifest_per_file_rows_and_metadata_accounting(spark, tmp_path):
 
 
 def test_replace_where_and_merge_upsert_on_date_keys(spark, tmp_path):
-    """Date-typed maintenance keys across the triad (round-11 seam
-    audit, companion to the date z-order fix): replace_where over a
+    """Date-typed maintenance keys across the triad (companion
+    to the date z-order support): replace_where over a
     calendar-month slice and merge_upsert keyed on a date column must
     resolve files through the isoformat manifest stats, keep totals
     exact, and land the new rows."""
@@ -1260,7 +1260,7 @@ def test_replace_where_and_merge_upsert_on_date_keys(spark, tmp_path):
 
 
 def test_reserved_rows_key_rejected_in_stats_cols(spark, tmp_path):
-    """Round-12 hardening: "__rows" is the manifest's reserved per-file
+    """"__rows" is the manifest's reserved per-file
     row-count key; a real column by that name in stats_cols would
     clobber the count with a min/max dict and crash _kept_rows later.
     Commit paths must reject it loudly BEFORE writing anything."""
