@@ -1342,24 +1342,23 @@ def order_snapshot_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     one marker row per (customer, snapshot date), all 8 snapshots in one
     pass (plans/snapshot.py)."""
     from f1_data_engineering_machine_learning_spark.plans.snapshot import (
+        Agg,
         SnapshotSpec,
         asof,
-        scoped_count,
-        scoped_sum,
         snapshot_single_pass,
         trailing,
     )
 
-    price = F.col("o_totalprice").cast("decimal(30,2)")
+    price = "CAST(o_totalprice AS DECIMAL(30,2))"
     spec = SnapshotSpec(
         entity_keys=["o_custkey"],
         date_col="o_orderdate",
         scopes={"life": asof(), "90d": trailing("90 DAY")},
         aggs=[
-            ("qtd_life", "life", scoped_count()),
-            ("total_life", "life", scoped_sum(price)),
-            ("qtd_90d", "90d", scoped_count()),
-            ("total_90d", "90d", scoped_sum(price)),
+            ("qtd_life", "life", Agg("count")),
+            ("total_life", "life", Agg("sum", price)),
+            ("qtd_90d", "90d", Agg("count")),
+            ("total_90d", "90d", Agg("sum", price)),
         ],
     )
     out = snapshot_single_pass(_t(spark, sf_dir, "orders"), spec, _SNAP_DATES)

@@ -25,6 +25,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from f1_data_engineering_machine_learning_spark.io import replace_dir
+
 
 def forget_keys(
     df: DataFrame,
@@ -96,8 +98,8 @@ def forget_in_table(
     1. write the filtered frame to a sibling temp directory (preserving
        the table's hive partitioning, re-inferred from its file layout),
     2. verify the staged row count equals the audited ``n_kept``,
-    3. swap directories (old table renamed aside, staged promoted, old
-       removed last).
+    3. swap directories with ``io.replace_dir`` (old table renamed aside,
+       staged promoted, old restored if that fails, old removed last).
 
     The original table stays intact until the staged copy is fully
     written AND verified — a failure at any earlier point leaves the
@@ -112,9 +114,7 @@ def forget_in_table(
     )}
     root = os.path.abspath(path.removeprefix("file:"))
     tmp = root.rstrip(os.sep) + ".__forget_staging"
-    old = root.rstrip(os.sep) + ".__forget_old"
     shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
 
     writer = forget_keys(df, keys, key_col).write.mode("overwrite")
     if parts:
@@ -128,9 +128,7 @@ def forget_in_table(
             f"forget_in_table verification failed: staged {staged_n} rows, "
             f"audit expected {audit['n_kept']}; original table untouched"
         )
-    os.rename(root, old)
-    os.rename(tmp, root)
-    shutil.rmtree(old)
+    replace_dir(root, tmp)
     return audit
 
 

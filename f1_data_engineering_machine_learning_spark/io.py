@@ -13,6 +13,7 @@ from __future__ import annotations
 import csv
 import glob as _glob
 import os
+import shutil
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -152,32 +153,39 @@ def load_testdata(
     }
 
 
-def write_table_overwrite(
-    df: DataFrame,
-    path: str,
-    compact_files: int | None = None,
-    partition_by: list[str] | None = None,
-) -> None:
-    """Full-overwrite sink with optional small-file compaction.
+def write_table_overwrite(df: DataFrame, path: str) -> None:
+    """Full-overwrite sink.
 
     The reference always writes ``coalesce(1)`` + ``overwriteSchema``
     (/root/reference/scripts/02_bronze.py:103-109,
     /root/reference/scripts/spark_ops.py:87-93) — correct at 10^5 rows,
-    wrong at 100 TB. Here compaction is opt-in (``compact_files``), and at
-    scale the caller should instead leave Spark's natural output
-    parallelism or use a real OPTIMIZE pass.
+    wrong at 100 TB. Here the write keeps Spark's natural output
+    parallelism; small files merge in a separate compaction pass
+    (``IncrementalIngestor.compact``, or OPTIMIZE on Delta).
     """
-    if compact_files:
-        df = df.coalesce(compact_files)
     writer = df.write.mode("overwrite")
     spark = df.sparkSession
     if delta_enabled(spark):  # pragma: no cover - optional dependency
         writer = writer.format("delta").option("overwriteSchema", "true")
     else:
         writer = writer.format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
     writer.save(path)
+
+
+def replace_dir(path: str, staged: str) -> None:
+    """Swap the fully written directory ``staged`` in as ``path``. The old
+    copy is renamed aside first, the staged copy promoted, the old copy
+    restored if promotion raises, and deleted only last: the table is
+    never deleted before its replacement is in place."""
+    old = path.rstrip(os.sep) + ".__old"
+    shutil.rmtree(old, ignore_errors=True)
+    os.rename(path, old)
+    try:
+        os.rename(staged, path)
+    except BaseException:
+        os.rename(old, path)
+        raise
+    shutil.rmtree(old)
 
 
 def write_partition_slice(

@@ -46,9 +46,9 @@ def build_bronze(
     /root/reference/scripts/spark_ops.py:49-64)."""
     df = read_csv_all_string(spark, input_glob, sep=";")
     if output_path:
-        # the reference coalesces to 1 file (tiny data); keep a small file
-        # count without a single-task bottleneck
-        write_table_overwrite(df, output_path, compact_files=None)
+        # the reference coalesces to 1 file (tiny data); no coalesce here,
+        # so the write is not a single-task bottleneck
+        write_table_overwrite(df, output_path)
         df = spark.read.parquet(output_path)
     df.createOrReplaceTempView(view_name)
     return df

@@ -11,6 +11,12 @@ generic snapshot engine (plans/snapshot.py):
   the trailing year of the snapshot date.
 - tempRoundNumber     = tb_event join (lines 19-22, 171).
 
+The whole query is one module-level ``SnapshotSpec`` of SQL text
+(``_SPEC``): the aggregates, their conditions and their scopes, as in the
+reference's SQL file. It needs no Spark session, so
+``driver_snapshot_columns`` (which the DuckDB oracle, the benchmark and the
+tests read) takes its names from the same spec the engine runs.
+
 Column names match the reference byte-for-byte — including its
 ``avgPositioCurrentTemp`` typo (line 100), which downstream ML consumes as a
 feature name and therefore IS the contract.
@@ -25,7 +31,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from f1_data_engineering_machine_learning_spark.functions import sentinel_int, str_to_date
@@ -35,33 +41,26 @@ from f1_data_engineering_machine_learning_spark.plans.snapshot import (
     SnapshotSpec,
     asof,
     current_period,
-    scoped_avg,
-    scoped_count,
-    scoped_median,
-    scoped_sum,
     snapshot_single_pass,
     trailing,
 )
 
-def _metrics() -> list[tuple[str, Column, Column | None]]:
-    """(metric base name, value column, inner condition) — the 9-avg/9-median
-    set. Built lazily: Column construction needs an active SparkContext."""
-    pos = F.col("Position")
-    grid = F.col("GridPosition")
-    gain = grid - pos
-    race = F.col("identifier") == "race"
-    sprint = F.col("identifier") == "sprint"
-    return [
-        ("Position", pos, None),
-        ("PositionRace", pos, race),
-        ("PositionSprint", pos, sprint),
-        ("GridPosition", grid, None),
-        ("GridPositionRace", grid, race),
-        ("GridPositionSprint", grid, sprint),
-        ("PositionGain", gain, None),
-        ("PositionRaceGain", gain, race),
-        ("PositionSprintGain", gain, sprint),
-    ]
+_RACE = "identifier = 'race'"
+_SPRINT = "identifier = 'sprint'"
+_GAIN = "GridPosition - Position"
+
+#: (metric base name, value SQL, condition SQL): the 9-avg/9-median set
+_METRICS = [
+    ("Position", "Position", None),
+    ("PositionRace", "Position", _RACE),
+    ("PositionSprint", "Position", _SPRINT),
+    ("GridPosition", "GridPosition", None),
+    ("GridPositionRace", "GridPosition", _RACE),
+    ("GridPositionSprint", "GridPosition", _SPRINT),
+    ("PositionGain", _GAIN, None),
+    ("PositionRaceGain", _GAIN, _RACE),
+    ("PositionSprintGain", _GAIN, _SPRINT),
+]
 
 #: exact reference naming: avg columns drop the "Gain" suffix ordering —
 #: avgPositionGain / avgPositionRaceGain / avgPositionSprintGain — and the
@@ -71,95 +70,49 @@ _AVG_NAME_OVERRIDES = {("PositionGain", "CurrentTemp"): "avgPositioCurrentTemp"}
 
 def _block(scope: str, suffix: str) -> list[tuple[str, str, Agg]]:
     """One scope's aggregate block in the reference's column order."""
-    pos, grid = F.col("Position"), F.col("GridPosition")
-    race = F.col("identifier") == "race"
-    sprint = F.col("identifier") == "sprint"
     aggs: list[tuple[str, str, Agg]] = []
     if scope == "life":
         aggs += [
-            ("qtdRuns", scope, scoped_count()),
-            ("qtdRace", scope, scoped_count(race)),
-            ("qtdSprint", scope, scoped_count(sprint)),
+            ("qtdRuns", scope, Agg("count")),
+            ("qtdRace", scope, Agg("count", cond=_RACE)),
+            ("qtdSprint", scope, Agg("count", cond=_SPRINT)),
         ]
-    metrics = _metrics()
-    for base, val, cond in metrics:
+    for base, value, cond in _METRICS:
         name = _AVG_NAME_OVERRIDES.get((base, suffix), f"avg{base}{suffix}")
-        aggs.append((name, scope, scoped_avg(val, cond)))
-    for base, val, cond in metrics:
-        aggs.append((f"median{base}{suffix}", scope, scoped_median(val, cond)))
+        aggs.append((name, scope, Agg("avg", value, cond)))
+    for base, value, cond in _METRICS:
+        aggs.append((f"median{base}{suffix}", scope, Agg("median", value, cond)))
     aggs += [
-        (f"qtdeWins{suffix}", scope, scoped_count(pos == 1)),
-        (f"qtdePodiums{suffix}", scope, scoped_count(pos <= 3)),
-        (f"qtdePoles{suffix}", scope, scoped_count(grid == 1)),
+        (f"qtdeWins{suffix}", scope, Agg("count", cond="Position = 1")),
+        (f"qtdePodiums{suffix}", scope, Agg("count", cond="Position <= 3")),
+        (f"qtdePoles{suffix}", scope, Agg("count", cond="GridPosition = 1")),
     ]
     if scope == "current":
-        aggs.append(
-            (
-                f"totalPoints{suffix}",
-                scope,
-                scoped_sum(F.col("Points").cast("double")),
-            )
-        )
+        aggs.append((f"totalPoints{suffix}", scope, Agg("sum", "CAST(Points AS DOUBLE)")))
     return aggs
 
 
-def _spec() -> SnapshotSpec:
-    return SnapshotSpec(
-        entity_keys=["DriverId"],
-        date_col="dtEvent",
-        scopes={
-            "life": asof(),
-            "year1": trailing("1 YEAR"),
-            "current": current_period("year"),
-        },
-        aggs=(
-            _block("life", "")
-            + _block("year1", "1Year")
-            + _block("current", "CurrentTemp")
-        ),
-        activity_scope="year1",
-        extra_cols={"dtYear": lambda ref: F.year(ref)},
-    )
-
-
-_METRIC_BASES = [
-    "Position",
-    "PositionRace",
-    "PositionSprint",
-    "GridPosition",
-    "GridPositionRace",
-    "GridPositionSprint",
-    "PositionGain",
-    "PositionRaceGain",
-    "PositionSprintGain",
-]
-
-
-def _block_names(scope: str, suffix: str) -> list[str]:
-    """Column NAMES of one scope's block — pure strings, no SparkContext
-    needed (the oracle generator renders these at import time)."""
-    names: list[str] = []
-    if scope == "life":
-        names += ["qtdRuns", "qtdRace", "qtdSprint"]
-    for base in _METRIC_BASES:
-        names.append(_AVG_NAME_OVERRIDES.get((base, suffix), f"avg{base}{suffix}"))
-    for base in _METRIC_BASES:
-        names.append(f"median{base}{suffix}")
-    names += [f"qtdeWins{suffix}", f"qtdePodiums{suffix}", f"qtdePoles{suffix}"]
-    if scope == "current":
-        names.append(f"totalPoints{suffix}")
-    return names
+#: the reference's query as data (feature_store_drivers.sql:24-167)
+_SPEC = SnapshotSpec(
+    entity_keys=["DriverId"],
+    date_col="dtEvent",
+    scopes={
+        "life": asof(),
+        "year1": trailing("1 YEAR"),
+        "current": current_period("year"),
+    },
+    aggs=_block("life", "") + _block("year1", "1Year") + _block("current", "CurrentTemp"),
+    activity_scope="year1",
+    extra_cols={"dtYear": f"year({DT_REF})"},
+)
 
 
 def driver_snapshot_columns() -> list[str]:
     """Full output column order
     (/root/reference/sql/feature_store_drivers.sql:122-167)."""
-    return (
-        ["tempRoundNumber", "DriverId", "dtRef", "dtYear"]
-        + _block_names("life", "")
-        + _block_names("year1", "1Year")
-        + _block_names("current", "CurrentTemp")
-    )
+    return ["tempRoundNumber", "DriverId", "dtRef", "dtYear"] + [
+        name for name, _, _ in _SPEC.aggs
+    ]
 
 
 def typed_results(results: DataFrame) -> DataFrame:
@@ -210,11 +163,9 @@ def _attach_round(fs: DataFrame, typed: DataFrame) -> DataFrame:
     joined = fs.join(
         F.broadcast(events), F.col(DT_REF) == F.col("__dtEvent"), "left"
     )
-    return joined.select(
+    return joined.selectExpr(
         *[
-            F.date_format(DT_REF, "yyyy-MM-dd").alias("dtRef")
-            if c == "dtRef"
-            else c
+            f"date_format({DT_REF}, 'yyyy-MM-dd') AS {DT_REF}" if c == DT_REF else f"`{c}`"
             for c in driver_snapshot_columns()
         ]
     )
@@ -224,7 +175,7 @@ def driver_feature_store(results: DataFrame, dates: Sequence[str]) -> DataFrame:
     """All snapshot dates in one pass of per-entity running windows
     (plans/snapshot.py)."""
     typed = typed_results(results)
-    return _attach_round(snapshot_single_pass(typed, _spec(), dates), typed)
+    return _attach_round(snapshot_single_pass(typed, _SPEC, dates), typed)
 
 
 def driver_feature_snapshot(results: DataFrame, date: str) -> DataFrame:

@@ -16,12 +16,17 @@ writes — a 1000-executor cluster can materialize many dates concurrently.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from f1_data_engineering_machine_learning_spark.io import vacuum, write_partition_slice
+from f1_data_engineering_machine_learning_spark.io import (
+    replace_dir,
+    vacuum,
+    write_partition_slice,
+)
 from f1_data_engineering_machine_learning_spark.session import delta_enabled
 
 
@@ -61,12 +66,11 @@ class IncrementalIngestor:
             # overwrite replaces only this slice
             write_partition_slice(df, self.path, ["dtYear", "dtRef"])
 
-    def exec(self, dates: Sequence[str], compact: bool = False) -> None:
-        """The per-date loop (/root/reference/scripts/spark_ops.py:177-194)."""
+    def exec(self, dates: Sequence[str]) -> None:
+        """The per-date loop (/root/reference/scripts/spark_ops.py:177-191);
+        ``compact`` is the reference's optional rewrite after it."""
         for date in dates:
             self.save(self.load(str(date)), str(date))
-        if compact:
-            self.compact()
 
     def compact(self) -> None:
         """Small-file compaction + vacuum
@@ -75,9 +79,6 @@ class IncrementalIngestor:
         single-task bottleneck at ours; here files merge per partition
         (``repartition`` on the partition columns), written to a temp
         sibling and swapped in (on Delta this would be ``OPTIMIZE``)."""
-        import os
-        import shutil
-
         spark = SparkSession.getActiveSession()
         if delta_enabled(spark):  # pragma: no cover - optional dependency
             vacuum(spark, self.path)
@@ -90,8 +91,7 @@ class IncrementalIngestor:
             .partitionBy("dtYear", "dtRef")
             .parquet(tmp)
         )
-        shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
+        replace_dir(self.path, tmp)
 
     def read(self) -> DataFrame:
         spark = SparkSession.getActiveSession()
@@ -113,9 +113,6 @@ def upsert_table(
     (IncrementalIngestor) is the preferred incremental primitive when
     updates align with a partition column. Keys must be unique within
     ``updates`` (last-writer ambiguity otherwise — caller's contract)."""
-    import os
-    import shutil
-
     keys = list(keys)
     if delta_enabled(spark):  # pragma: no cover - optional dependency
         from delta.tables import DeltaTable  # type: ignore
@@ -139,5 +136,4 @@ def upsert_table(
     merged = kept.unionByName(updates)
     tmp = path + ".__upsert_tmp"
     merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
+    replace_dir(path, tmp)

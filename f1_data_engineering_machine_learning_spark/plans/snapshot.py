@@ -5,9 +5,12 @@ reference date, aggregate the full history at/before that date over several
 time scopes (the reference's ``sql/feature_store_drivers.sql``, driven
 per-date by its ``scripts/spark_ops.py:135-191``).
 
-A ``SnapshotSpec`` is declarative: each scope is a ``Scope`` (as-of,
-trailing interval, or current period) and each aggregate an ``Agg``
-(aggregate function plus its fact-side input column).
+A ``SnapshotSpec`` is plain data, like the reference's SQL file: each scope
+is a ``Scope`` (as-of, trailing interval, or current period) and each
+aggregate an ``Agg`` (aggregate function, value SQL, condition SQL). The
+engine turns the spec into SQL expression strings and hands them to Spark
+in a few ``selectExpr`` calls, so a spec costs no Spark session to declare
+and no ``Column`` construction to evaluate.
 
 ``snapshot_single_pass`` is the one engine, for one date or many: the
 reference's per-date unit is ``[date]``. It is a per-entity running-window
@@ -39,10 +42,10 @@ never contribute to a frame.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping, Sequence
+from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: name of the snapshot reference-date column in every output
@@ -74,14 +77,15 @@ class Scope:
         if self.kind not in ("asof", "trailing", "period"):
             raise ValueError(f"unknown scope kind {self.kind!r}")
 
-    def since(self, ref: Column, d: Column) -> Column:
-        """Whether a fact dated ``d`` is on or after the scope's first day
-        at ``ref``: the activity clip of the marker grid."""
+    def since(self, ref: str, d: str) -> str:
+        """SQL: whether a fact dated ``d`` is on or after the scope's first
+        day at ``ref`` (both SQL date expressions): the activity clip of
+        the marker grid."""
         if self.kind == "trailing":
-            return d >= ref - F.expr(f"INTERVAL {self.arg}")
+            return f"{d} >= {ref} - INTERVAL {self.arg}"
         if self.kind == "period":
-            return d >= F.trunc(ref, self.arg)
-        return F.lit(True)
+            return f"{d} >= trunc({ref}, '{self.arg}')"
+        return "true"
 
     def frame(self, partition: str) -> str:
         """The window clause for this scope over the date column ``__d``."""
@@ -107,54 +111,27 @@ def current_period(unit: str) -> Scope:
     return Scope("period", unit)
 
 
-@dataclass(frozen=True, eq=False)
+@dataclass(frozen=True)
 class Agg:
-    """One aggregate: ``fn`` (a key of ``AGG_SQL``) over ``value``,
-    restricted to facts matching ``cond``. ``count`` ignores ``value``."""
+    """One aggregate: ``fn`` (a key of ``AGG_SQL``) over the SQL expression
+    ``value``, restricted to facts matching the SQL predicate ``cond`` —
+    the reference's ``AGG(CASE WHEN scope [AND cond] THEN x END)``.
+    ``count`` ignores ``value`` and counts matching facts."""
 
     fn: str
-    value: Column | None = None
-    cond: Column | None = None
+    value: str | None = None
+    cond: str | None = None
 
-    def input(self) -> Column:
-        """The fact-side column the aggregate function reads."""
+    def input(self) -> str:
+        """SQL of the fact-side column the aggregate function reads."""
         if self.fn == "count":
-            return F.lit(1) if self.cond is None else F.when(self.cond, 1).otherwise(0)
-        return self.value if self.cond is None else F.when(self.cond, self.value)
+            return "1" if self.cond is None else f"CASE WHEN {self.cond} THEN 1 ELSE 0 END"
+        if self.cond is None:
+            return self.value
+        return f"CASE WHEN {self.cond} THEN {self.value} END"
 
 
-def _col(value: Column | str) -> Column:
-    return F.col(value) if isinstance(value, str) else value
-
-
-def scoped_count(cond_inner: Column | None = None) -> Agg:
-    """Count within a scope, NULL when the scope is empty (module docstring).
-    With ``cond_inner``, counts only matching rows — the reference's
-    qtdRace/qtdeWins-style conditional counts
-    (/root/reference/sql/feature_store_drivers.sql:35-36,55-57)."""
-    return Agg("count", cond=cond_inner)
-
-
-def scoped_avg(value: Column | str, cond_inner: Column | None = None) -> Agg:
-    """NULL-skipping scoped AVG — ``AVG(CASE WHEN scope [AND cond] THEN x END)``
-    (/root/reference/sql/feature_store_drivers.sql:37-45)."""
-    return Agg("avg", _col(value), cond_inner)
-
-
-def scoped_median(value: Column | str, cond_inner: Column | None = None) -> Agg:
-    """Exact scoped median — ``PERCENTILE(CASE WHEN ... THEN x END, 0.5)``
-    (/root/reference/sql/feature_store_drivers.sql:46-54)."""
-    return Agg("median", _col(value), cond_inner)
-
-
-def scoped_sum(value: Column | str, cond_inner: Column | None = None) -> Agg:
-    """Scoped SUM, NULL when scope empty —
-    ``SUM(CASE WHEN scope THEN x END)``
-    (/root/reference/sql/feature_store_drivers.sql:115)."""
-    return Agg("sum", _col(value), cond_inner)
-
-
-@dataclass
+@dataclass(frozen=True)
 class SnapshotSpec:
     """Declarative description of a point-in-time snapshot aggregation.
 
@@ -168,7 +145,7 @@ class SnapshotSpec:
     activity_scope : optional scope name; entities with zero rows in that
                   scope are dropped (the reference's ``tb_drivers``
                   trailing-activity gate, ``feature_store_drivers.sql:24-28``).
-    extra_cols  : output_column -> fn(dt_ref) -> Column, appended per group
+    extra_cols  : output_column -> SQL over ``dtRef``, appended per row
                   (e.g. the reference's ``dtYear = YEAR(dtRef)`` stamp).
     """
 
@@ -177,12 +154,17 @@ class SnapshotSpec:
     scopes: Mapping[str, Scope]
     aggs: Sequence[tuple[str, str, Agg]]
     activity_scope: str | None = None
-    extra_cols: Mapping[str, Callable[[Column], Column]] = field(default_factory=dict)
+    extra_cols: Mapping[str, str] = field(default_factory=dict)
 
 
 _DATE = "__d"
 _MARKER = "__m"
 _ACTIVITY_COL = "__activity"
+
+
+def _q(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return f"`{name}`"
 
 
 def _validate(spec: SnapshotSpec) -> None:
@@ -203,7 +185,7 @@ def _aggs(spec: SnapshotSpec) -> list[tuple[str, str, Agg]]:
     _validate(spec)
     aggs = list(spec.aggs)
     if spec.activity_scope is not None:
-        aggs.append((_ACTIVITY_COL, spec.activity_scope, scoped_count()))
+        aggs.append((_ACTIVITY_COL, spec.activity_scope, Agg("count")))
     return aggs
 
 
@@ -214,32 +196,26 @@ def _inputs(facts: DataFrame, spec: SnapshotSpec, aggs) -> tuple[DataFrame, list
     frame and each aggregate's input column name. Facts without a date
     are in no snapshot."""
     index: dict[str, int] = {}
-    columns = []
-    names = []
     for _, _, agg in aggs:
-        col = agg.input()
-        j = index.setdefault(str(col), len(index))
-        if j == len(columns):
-            columns.append(col.alias(f"__a{j}"))
-        names.append(f"__a{j}")
-    frame = facts.select(
-        *spec.entity_keys,
-        F.to_date(F.col(spec.date_col)).alias(_DATE),
-        *columns,
-    ).filter(F.col(_DATE).isNotNull())
-    return frame, names
+        index.setdefault(agg.input(), len(index))
+    frame = facts.selectExpr(
+        *map(_q, spec.entity_keys),
+        f"to_date({_q(spec.date_col)}) AS {_DATE}",
+        *[f"{sql} AS __a{j}" for sql, j in index.items()],
+    ).filter(f"{_DATE} IS NOT NULL")
+    return frame, [f"__a{index[agg.input()]}" for _, _, agg in aggs]
 
 
 def _finish(out: DataFrame, spec: SnapshotSpec) -> DataFrame:
     """Project keys, dtRef, aggregates and extra columns; apply the
     activity gate."""
     if spec.activity_scope is not None:
-        out = out.filter(F.col(_ACTIVITY_COL) > 0)
-    return out.select(
-        *spec.entity_keys,
+        out = out.filter(f"{_ACTIVITY_COL} > 0")
+    return out.selectExpr(
+        *map(_q, spec.entity_keys),
         DT_REF,
-        *[out_col for out_col, _, _ in spec.aggs],
-        *[fn(F.col(DT_REF)).alias(name) for name, fn in spec.extra_cols.items()],
+        *[_q(out_col) for out_col, _, _ in spec.aggs],
+        *[f"{sql} AS {_q(name)}" for name, sql in spec.extra_cols.items()],
     )
 
 
@@ -249,49 +225,44 @@ def snapshot_single_pass(
     """Every snapshot date in one pass of per-entity running windows
     (module docstring); one date is ``[date]``."""
     aggs = _aggs(spec)
-    keys = list(spec.entity_keys)
+    keys = [_q(k) for k in spec.entity_keys]
     rows, inputs = _inputs(facts, spec, aggs)
-    # one SQL literal, not a Column per date: each Column is a py4j
-    # round trip
     literals = ", ".join(f"DATE'{d}'" for d in dates)
-    grid = F.expr(f"CAST(array({literals}) AS ARRAY<DATE>)")
+    grid = f"CAST(array({literals}) AS ARRAY<DATE>)"
 
-    spans = rows.groupBy(*keys).agg(
-        F.min(_DATE).alias("__first"), F.max(_DATE).alias("__last")
+    spans = rows.groupBy(*spec.entity_keys).agg(
+        F.expr(f"min({_DATE}) AS __first"), F.expr(f"max({_DATE}) AS __last")
     )
-
-    def clip(ref: Column) -> Column:
-        keep = F.col("__first") <= ref
-        if spec.activity_scope is not None:
-            # an entity whose last fact precedes the activity scope is inactive
-            keep = keep & spec.scopes[spec.activity_scope].since(ref, F.col("__last"))
-        return keep
-
-    markers = spans.select(
+    clip = "__first <= x"
+    if spec.activity_scope is not None:
+        # an entity whose last fact precedes the activity scope is inactive
+        clip += f" AND {spec.scopes[spec.activity_scope].since('x', '__last')}"
+    markers = spans.selectExpr(
         *keys,
-        F.explode(F.filter(grid, clip)).alias(_DATE),
-        F.lit(True).alias(_MARKER),
+        f"explode(filter({grid}, x -> {clip})) AS {_DATE}",
+        f"true AS {_MARKER}",
     )
-    rows = rows.withColumn(_MARKER, F.lit(False)).unionByName(
+    rows = rows.selectExpr("*", f"false AS {_MARKER}").unionByName(
         markers, allowMissingColumns=True
     )
 
-    partition = ", ".join(f"`{k}`" for k in keys)
-    frames = {}
+    partition = ", ".join(keys)
+    frames, periods = {}, []
     for j, (name, scope) in enumerate(spec.scopes.items()):
         by = partition
         if scope.kind == "period":
-            rows = rows.withColumn(f"__p{j}", F.trunc(_DATE, scope.arg))
+            periods.append(f"trunc({_DATE}, '{scope.arg}') AS __p{j}")
             by = f"{partition}, `__p{j}`"
         frames[name] = scope.frame(by)
-    windowed = rows.select(
+    if periods:
+        rows = rows.selectExpr("*", *periods)
+    windowed = rows.selectExpr(
         *keys,
-        F.col(_DATE).alias(DT_REF),
+        f"{_DATE} AS {DT_REF}",
         _MARKER,
         *[
-            F.expr(f"{AGG_SQL[agg.fn].format(f'`{a}`')} OVER ({frames[scope]})")
-            .alias(out_col)
+            f"{AGG_SQL[agg.fn].format(a)} OVER ({frames[scope]}) AS {_q(out_col)}"
             for a, (out_col, scope, agg) in zip(inputs, aggs)
         ],
     )
-    return _finish(windowed.filter(F.col(_MARKER)), spec)
+    return _finish(windowed.filter(_MARKER), spec)

@@ -76,12 +76,9 @@ def build_session(
         # 2.27 -> 4.21 s, part_association_rules 1.99 -> 3.67 s,
         # ngram_jaccard_pairs_docs 1.82 -> 3.45 s; stage traces show
         # (0+1)/1 vs (0+8)/8). The failure mode is scale-independent —
-        # a 100 TB run has the same byte-thin/CPU-heavy stages — so the
-        # env knob is for cluster-side experiments only.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
+        # a 100 TB run has the same byte-thin/CPU-heavy stages — so
+        # cluster-side experiments set it through ``extra_conf``.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # One bench/oracle session compiles ~4000 distinct whole-stage
         # codegen units across 206 query plans; the default 100-entry
@@ -90,10 +87,7 @@ def build_session(
         # of a full catalog session resident (metaspace cost is bounded:
         # 232 MB measured with the 100-entry cache and per-class
         # footprint is ~10-100 KB).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "10000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "10000")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

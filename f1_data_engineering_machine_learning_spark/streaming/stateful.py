@@ -88,62 +88,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def _make_totals_processor():
-    """Spark 4 ``StatefulProcessor`` for the same running-totals operator —
-    built lazily inside a factory because the base class import requires a
-    recent pyspark and the class is only needed on the transformWithState
-    path."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            if self._state.exists():
-                n_events, total_value = self._state.get()
-            else:
-                n_events, total_value = 0, 0.0
-            last_ts = None
-            for pdf in rows:
-                n_events += len(pdf)
-                total_value += float(pdf["value"].sum())
-                batch_max = pdf["ts"].max()
-                last_ts = batch_max if last_ts is None else max(last_ts, batch_max)
-            self._state.update((n_events, total_value))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n_events],
-                    "total_value": [total_value],
-                    "last_ts": [last_ts],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotalsProcessor()
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same running-totals operator on Spark 4's ``transformWithState``
-    API — typed per-key ValueState via a StatefulProcessor lifecycle
-    (init/handleInputRows/close) instead of the flat-tuple GroupState.
-    REQUIRES the RocksDB state store provider
-    (streaming/jobs.py::use_rocksdb_state) and a working ``google.protobuf``
-    (the processor talks to its Python driver worker over a protobuf
-    channel — absent in this container, so the parity test skips visibly
-    rather than never existing)."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_make_totals_processor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Streaming throttle — the stateful twin of operators/throttle.py
 # ---------------------------------------------------------------------------

@@ -29,14 +29,13 @@ from f1_data_engineering_machine_learning_spark.plans.snapshot import (
 def snapshot_one(facts: DataFrame, spec: SnapshotSpec, date: str) -> DataFrame:
     """One snapshot date as one aggregation over ``fact_date <= date``."""
     aggs = _aggs(spec)
-    dt_ref = F.lit(str(date)).cast("date")
-    d = F.col(_DATE)
+    dt_ref = f"DATE'{date}'"
     scope_names = list(spec.scopes)
     rows, inputs = _inputs(facts, spec, aggs)
-    gated = rows.filter(d <= dt_ref).select(
+    gated = rows.filter(f"{_DATE} <= {dt_ref}").selectExpr(
         "*",
         *[
-            spec.scopes[name].since(dt_ref, d).alias(f"__s{j}")
+            f"{spec.scopes[name].since(dt_ref, _DATE)} AS __s{j}"
             for j, name in enumerate(scope_names)
         ],
     )
@@ -48,7 +47,7 @@ def snapshot_one(facts: DataFrame, spec: SnapshotSpec, date: str) -> DataFrame:
         ).alias(out_col)
         for a, (out_col, scope, agg) in zip(inputs, aggs)
     ]
-    out = gated.groupBy(*spec.entity_keys).agg(*exprs).withColumn(DT_REF, dt_ref)
+    out = gated.groupBy(*spec.entity_keys).agg(*exprs).withColumn(DT_REF, F.expr(dt_ref))
     return _finish(out, spec)
 
 

@@ -13,9 +13,9 @@ from f1_data_engineering_machine_learning_spark.pipeline import (
 )
 from f1_data_engineering_machine_learning_spark.pipeline.fixtures import results_fixture
 from f1_data_engineering_machine_learning_spark.plans.snapshot import (
+    Agg,
     SnapshotSpec,
     asof,
-    scoped_count,
     snapshot_single_pass,
 )
 from tests.util_compare import assert_frames_equal
@@ -47,7 +47,7 @@ def test_snapshot_empty_facts(spark):
         entity_keys=["k"],
         date_col="d",
         scopes={"life": asof()},
-        aggs=[("n", "life", scoped_count())],
+        aggs=[("n", "life", Agg("count"))],
     )
     out = snapshot_single_pass(facts, spec, ["2024-01-01"])
     assert out.count() == 0
@@ -62,7 +62,7 @@ def test_snapshot_date_before_all_facts(spark):
         entity_keys=["k"],
         date_col="d",
         scopes={"life": asof()},
-        aggs=[("n", "life", scoped_count())],
+        aggs=[("n", "life", Agg("count"))],
     )
     assert snapshot_single_pass(facts, spec, ["2020-01-01"]).count() == 0
 
@@ -119,7 +119,7 @@ def test_snapshot_spec_validation(spark):
         entity_keys=["k"],
         date_col="d",
         scopes={"life": asof()},
-        aggs=[("n", "nope", scoped_count())],
+        aggs=[("n", "nope", Agg("count"))],
     )
     with _pytest.raises(ValueError, match="unknown scopes"):
         snapshot_single_pass(facts, bad, ["2024-02-01"]).collect()

@@ -65,15 +65,15 @@ def test_feature_snapshot_matches_reference_sql(f1, date):
 def test_loop_and_single_pass_agree(f1):
     # reference: one per-date group-by aggregation per date, unioned
     from f1_data_engineering_machine_learning_spark.pipeline.feature_store import (
+        _SPEC,
         _attach_round,
-        _spec,
         typed_results,
     )
     from tests.snapshot_reference import snapshot_loop
 
     dates = ["2022-03-05", "2022-07-01", "2023-07-15"]
     typed = typed_results(f1["df"])
-    a = _attach_round(snapshot_loop(typed, _spec(), dates), typed).toPandas()
+    a = _attach_round(snapshot_loop(typed, _SPEC, dates), typed).toPandas()
     b = driver_feature_store(f1["df"], dates).toPandas()
     assert_frames_equal(a, b, "loop-vs-single-pass")
 
@@ -134,6 +134,17 @@ def test_snapshot_job_counts(f1, tmp_path, spark):
     )
     _, jobs = jobs_launched(spark, lambda: ing.exec(["2022-07-01"]))
     assert jobs == 5
+
+
+def test_snapshot_build_py4j_calls(f1):
+    """Building one date's snapshot frame (no job runs) stays within a
+    fixed number of py4j round trips: the spec is SQL text handed to a
+    few ``selectExpr`` calls, not a Column per aggregate."""
+    from tests.util_jobs import py4j_calls
+
+    driver_feature_snapshot(f1["df"], "2022-07-01")  # warm
+    _, calls = py4j_calls(lambda: driver_feature_snapshot(f1["df"], "2022-07-01"))
+    assert calls <= 588
 
 
 def test_abt_labels(f1):

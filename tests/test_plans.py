@@ -213,6 +213,46 @@ def test_compaction_merges_small_files(spark, tmp_path):
     assert not os.path.exists(path + ".__compact_tmp")
 
 
+def test_failed_swap_keeps_the_table(spark, tmp_path, monkeypatch):
+    """A compaction or an upsert whose promote step fails leaves the
+    original table readable with its rows: the old copy moves aside
+    before the staged copy is promoted, and comes back when that fails."""
+    import os
+
+    from f1_data_engineering_machine_learning_spark.plans import IncrementalIngestor
+    from f1_data_engineering_machine_learning_spark.plans.ingest import upsert_table
+
+    ing = IncrementalIngestor(
+        lambda d: spark.createDataFrame([(d, 1), (d, 2)], ["dtRef", "k"]),
+        str(tmp_path / "slices"),
+    )
+    ing.exec(["2022-03-05", "2022-07-01"])
+    upserted = str(tmp_path / "upserted")
+    upsert_table(spark, upserted, spark.createDataFrame([(1, "a")], ["id", "v"]), ["id"])
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    before = rows(ing.read().select("dtRef", "k"))
+    rename = os.rename
+
+    def promote_fails(src, dst):
+        if str(src).endswith(("__compact_tmp", "__upsert_tmp")):
+            raise OSError("injected promote failure")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", promote_fails)
+    with pytest.raises(OSError, match="injected"):
+        ing.compact()
+    with pytest.raises(OSError, match="injected"):
+        upsert_table(
+            spark, upserted, spark.createDataFrame([(2, "b")], ["id", "v"]), ["id"]
+        )
+    monkeypatch.undo()
+    assert rows(ing.read().select("dtRef", "k")) == before
+    assert rows(spark.read.parquet(upserted)) == [(1, "a")]
+
+
 def test_mixture_catalog_entries_construct_lazily(spark):
     """Catalog entries should not run Spark jobs at
     DataFrame-construction time unless the algorithm inherently needs a

@@ -8,16 +8,12 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from f1_data_engineering_machine_learning_spark.plans.snapshot import (
+    Agg,
     SnapshotSpec,
     asof,
     current_period,
-    scoped_avg,
-    scoped_count,
-    scoped_median,
-    scoped_sum,
     snapshot_single_pass,
     trailing,
 )
@@ -58,19 +54,19 @@ def _spec(activity_scope: str) -> SnapshotSpec:
             "season": current_period("year"),
         },
         aggs=[
-            ("n", "life", scoped_count()),
-            ("n_a", "life", scoped_count(F.col("kind") == "a")),
-            ("avg_v", "life", scoped_avg("v")),
-            ("med_v", "life", scoped_median("v")),
-            ("n_90d", "90d", scoped_count()),
-            ("sum_v_90d", "90d", scoped_sum("v")),
-            ("med_v_90d", "90d", scoped_median("v")),
-            ("n_year1", "year1", scoped_count()),
-            ("n_season", "season", scoped_count()),
-            ("avg_a_season", "season", scoped_avg("v", F.col("kind") == "a")),
+            ("n", "life", Agg("count")),
+            ("n_a", "life", Agg("count", cond="kind = 'a'")),
+            ("avg_v", "life", Agg("avg", "v")),
+            ("med_v", "life", Agg("median", "v")),
+            ("n_90d", "90d", Agg("count")),
+            ("sum_v_90d", "90d", Agg("sum", "v")),
+            ("med_v_90d", "90d", Agg("median", "v")),
+            ("n_year1", "year1", Agg("count")),
+            ("n_season", "season", Agg("count")),
+            ("avg_a_season", "season", Agg("avg", "v", "kind = 'a'")),
         ],
         activity_scope=activity_scope,
-        extra_cols={"dtYear": lambda ref: F.year(ref)},
+        extra_cols={"dtYear": "year(dtRef)"},
     )
 
 
