@@ -268,7 +268,6 @@ def minhash_dedup_pairs(
     k: int = 3,
     verify_threshold: float = 0.5,
     max_bucket: int | None = 1024,
-    verify_candidates_only: bool = False,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: band buckets -> candidate pairs
     (distinct across bands) -> EXACT Jaccard verification of candidates
@@ -277,24 +276,13 @@ def minhash_dedup_pairs(
     minhash_band_buckets) — per-bucket pair cost is O(max_bucket^2), not
     O(corpus^2). No explicit cache on the shingle frame: its distinct
     exchange is shared across the three verification consumers via
-    AQE exchange reuse (no session-lifetime cache to leak).
-
-    ``verify_candidates_only=True`` additionally semi-joins the corpus
-    down to docs appearing in some candidate pair BEFORE the verify
-    re-shingle, exactly like the incremental twin
-    (:func:`incremental_minhash_dedup_pairs`) — output unchanged
-    (non-candidate shingles/sizes are dropped by the inner joins
-    anyway). The trade, as measured: when candidates are a small
-    fraction of the corpus (the 100 TB production case) the verify
-    shuffle shrinks from every (id, shingle) pair to candidates only —
-    the dominant byte saving; on small/bench corpora it LENGTHENS the
-    stage critical path (the shingle scan now depends on the whole
-    bucket pipeline instead of running concurrently with it; measured
-    2.7 -> 3.8 s at sf0.1, 6-run A/B) without byte savings worth it,
-    so the default keeps the concurrent shape. Also measured and
-    rejected: lineage-cutting the pair/shingle frames (each cut is a
-    synchronous job barrier; AQE exchange reuse already collapses the
-    repeated subtrees within the one action — 2x slower)."""
+    AQE exchange reuse (no session-lifetime cache to leak). Measured and
+    rejected: semi-joining the corpus to candidate ids before the verify
+    re-shingle (the shingle scan then waits for the bucket pipeline;
+    2.7 -> 3.8 s at sf0.1), and lineage-cutting the pair/shingle frames
+    (each cut is a synchronous job barrier; AQE exchange reuse already
+    collapses the repeated subtrees within the one action — 2x
+    slower)."""
     df = ensure_min_parallelism(df)
     buckets = minhash_band_buckets(
         df, id_col, text_col, n_hashes, bands, k, max_bucket=max_bucket
@@ -305,16 +293,8 @@ def minhash_dedup_pairs(
         .filter(F.col("i") < F.col("j"))
         .distinct()
     )
-    verify_src = df
-    if verify_candidates_only:
-        cand = (
-            pairs.select(F.col("i").alias(id_col))
-            .union(pairs.select(F.col("j").alias(id_col)))
-            .distinct()
-        )
-        verify_src = df.join(cand, id_col, "left_semi")
     sh = (
-        verify_src.select(
+        df.select(
             F.col(id_col).alias("id"), F.explode(shingles(text_col, k)).alias("s")
         )
         .distinct()

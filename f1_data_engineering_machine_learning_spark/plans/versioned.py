@@ -30,6 +30,7 @@ Commit protocol (optimistic concurrency, Delta-style):
    exclusive-create is the compare-and-swap: if another writer took N
    first, creation fails and the commit RETRIES against the new state
    (re-reading the parent manifest, so appends compose correctly).
+   Every operation commits through this one loop, ``_commit_next``.
 
 ``rollback`` commits a NEW version whose file list is the old
 version's — history is append-only, a rollback is itself time-travel-
@@ -50,11 +51,15 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
@@ -70,15 +75,21 @@ def _jsonable(v):
     return v
 
 
-def _norm_bound(v):
-    """Normalize a caller-supplied prune/replace bound to the manifest's
-    stored stat form so comparisons are well-typed: stats for date /
-    timestamp columns are persisted as isoformat strings (_jsonable),
-    and ISO-8601 orders lexicographically, so mapping a date/datetime
-    bound through .isoformat() preserves the comparison."""
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return v
+def _span(s: dict | None, lo, hi) -> str:
+    """Where a file's committed ``{"min", "max"}`` stat sits against
+    [lo, hi]: "disjoint", "inside" or "overlap" (also for a file without
+    stats: its range is unknown, so it cannot be excluded). The bounds
+    go through the stats' own ``_jsonable`` form so the comparison is
+    well-typed: date/timestamp stats are isoformat strings, and ISO-8601
+    orders lexicographically."""
+    lo, hi = _jsonable(lo), _jsonable(hi)
+    if s is None:
+        return "overlap"
+    if s["max"] < lo or s["min"] > hi:
+        return "disjoint"
+    if s["min"] >= lo and s["max"] <= hi:
+        return "inside"
+    return "overlap"
 
 
 def _schema_fields(schema_json: str) -> list[tuple[str, str]]:
@@ -120,12 +131,26 @@ def _merge_schemas(parent_json: str, batch_json: str) -> str:
     return json.dumps(out)
 
 
+def _interleave(qcols: list, bits: int):
+    """Morton key over quantized long columns: bit ``i`` of column ``j``
+    lands at position ``i * n + j`` for ``n`` columns, so locality in the
+    key implies locality in EVERY dimension. Pure JVM expression tree
+    (shift/and/or per bit), whole-stage-codegen friendly."""
+    n = len(qcols)
+    z = F.lit(0).cast("long")
+    for i in range(bits):
+        for j, q in enumerate(qcols):
+            bit = F.shiftright(q, i).bitwiseAND(F.lit(1))
+            z = z.bitwiseOR(F.shiftleft(bit, i * n + j))
+    return z
+
+
 def zorder_key_ranked(cols: list[str], boundaries: list[list[float]]):
     """Rank-quantized Z-order key: each column's bucket id = how many of
     its equi-DEPTH boundaries the value exceeds (the
     ``equidepth_histogram`` tagging idiom — an ``F.aggregate`` fold over
-    a literal boundary array, pure JVM), then bit-interleaved as in
-    :func:`zorder_key`. This is the skew-proof arm: linear (min-max)
+    a literal boundary array, pure JVM), then bit-interleaved by
+    :func:`_interleave`. This is the skew-proof arm: linear (min-max)
     quantization puts 90% of a heavy-tailed column's rows into one
     bucket — zero z-resolution exactly where the data lives — while
     rank boundaries give every bucket ~equal mass BY CONSTRUCTION, so
@@ -133,8 +158,6 @@ def zorder_key_ranked(cols: list[str], boundaries: list[list[float]]):
     test_versioned). ``boundaries[i]`` must be sorted ascending; bucket
     count per column = len(boundaries[i]) + 1, and the bit budget is
     derived from it (clamped so the key fits a signed long). NULL -> 0."""
-    from pyspark.sql import functions as F
-
     n = len(cols)
     if n == 0 or len(boundaries) != n:
         raise ValueError("cols and boundaries must align")
@@ -153,31 +176,22 @@ def zorder_key_ranked(cols: list[str], boundaries: list[list[float]]):
         )
         q = F.coalesce(q, F.lit(0)).cast("long")
         qcols.append(F.least(q, F.lit((1 << bits) - 1)))
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, q in enumerate(qcols):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(q, i).bitwiseAND(F.lit(1)), i * n + j)
-            )
-    return z
+    return _interleave(qcols, bits)
 
 
 def zorder_key(cols: list[str], mins: list, maxs: list, bits: int = 16):
     """Z-order (Morton) key expression over numeric columns: each column
     linearly quantized to ``bits`` bits against its [min, max] (NULL ->
-    0, constant column -> 0), then bit-INTERLEAVED so locality in the
-    key implies locality in EVERY dimension — the property lexicographic
+    0, constant column -> 0), then bit-INTERLEAVED by
+    :func:`_interleave` — the multi-dimensional locality lexicographic
     sort lacks (it clusters only the leading column; trailing columns
     scatter across the whole file set). ``bits`` is clamped so the key
-    fits a signed long. Pure JVM-side expression tree (shift/and/or per
-    bit), whole-stage-codegen friendly; reference semantics: Delta
-    OPTIMIZE ZORDER BY (public Delta docs), re-expressed as a Spark
-    column. Linear (min-max) quantization is the deliberate v1: one
-    cheap agg supplies the bounds; heavy skew concentrates z-ranges the
-    same way it concentrates values (document, don't hide) — rank-based
-    quantization can be layered on via histogram boundaries if needed."""
-    from pyspark.sql import functions as F
-
+    fits a signed long. Reference semantics: Delta OPTIMIZE ZORDER BY
+    (public Delta docs), re-expressed as a Spark column. Linear
+    (min-max) quantization is the cheap arm: one agg supplies the
+    bounds; heavy skew concentrates z-ranges the same way it
+    concentrates values — :func:`zorder_key_ranked` is the skew-proof
+    arm."""
     n = len(cols)
     if n == 0:
         raise ValueError("zorder_key needs at least one column")
@@ -196,13 +210,7 @@ def zorder_key(cols: list[str], mins: list, maxs: list, bits: int = 16):
         ).cast("long")
         q = F.coalesce(q, F.lit(0))
         qcols.append(F.least(F.greatest(q, F.lit(0)), F.lit(top)))
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, q in enumerate(qcols):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(q, i).bitwiseAND(F.lit(1)), i * n + j)
-            )
-    return z
+    return _interleave(qcols, bits)
 
 
 class ConcurrentCompactionError(RuntimeError):
@@ -249,6 +257,130 @@ class VersionedTable:
         with open(os.path.join(self._mdir, f"v{version:08d}.json")) as fh:
             return json.load(fh)
 
+    def _snapshot(self, version: int | None) -> dict:
+        """The manifest of ``version`` (default: latest)."""
+        versions = self._versions()
+        if not versions:
+            raise FileNotFoundError(f"no committed version at {self.path}")
+        v = versions[-1] if version is None else version
+        if v not in versions:
+            raise FileNotFoundError(
+                f"version {v} not found (have {versions[0]}..{versions[-1]}; "
+                "it may have been vacuumed)"
+            )
+        return self._manifest(v)
+
+    def _paths(self, names: list[str]) -> list[str]:
+        return [os.path.join(self._ddir, f) for f in names]
+
+    def _discard(self, names: list[str]) -> None:
+        """Delete staged data files that no manifest will reference."""
+        for p in self._paths(names):
+            try:
+                os.remove(p)
+            except OSError:
+                pass
+
+    def _commit_next(self, make, staged: list[str] = ()) -> int:
+        """The one commit path. Read the tip; ``make(parent,
+        parent_manifest)`` returns the next version's ``mode``,
+        ``files``, ``n_rows``, ``stats`` and ``schema`` (and ``txns``;
+        by default the tip's per-app streaming high-water marks ride
+        forward, because a maintenance commit must not reopen the
+        exactly-once replay window — Delta keeps txn appId versions
+        across every commit kind). Then exclusive-create ``v<N>.json``:
+        a lost create retries ``make`` against the new tip, so appends
+        compose. ``make`` returns None for a txn replay (the result is
+        -1, nothing committed) or raises to abort; either way the
+        ``staged`` data files are deleted."""
+        os.makedirs(self._mdir, exist_ok=True)
+        v = -1
+        try:
+            while True:
+                versions = self._versions()
+                parent = versions[-1] if versions else None
+                pm = {} if parent is None else self._manifest(parent)
+                body = make(parent, pm)
+                if body is None:
+                    return -1
+                n = 0 if parent is None else parent + 1
+                manifest = {
+                    "version": n,
+                    "txns": dict(pm.get("txns", {})),
+                    **body,
+                    "parent": parent,
+                    "ts": time.time(),
+                }
+                try:
+                    fh = open(os.path.join(self._mdir, f"v{n:08d}.json"), "x")
+                except FileExistsError:
+                    continue  # lost the CAS — recompute against the new tip
+                v = n
+                with fh:
+                    json.dump(manifest, fh)
+                return v
+        finally:
+            if v < 0:
+                self._discard(staged)
+
+    def _has_nulls(self, name: str, col: str) -> bool:
+        """Whether data file ``name`` may hold NULLs in ``col``, from its
+        parquet footer's null counts (unknown counts as yes)."""
+        md = pq.ParquetFile(os.path.join(self._ddir, name)).metadata
+        cols = [md.schema.column(i).name for i in range(md.num_columns)]
+        if col not in cols:
+            return True
+        i = cols.index(col)
+        for g in range(md.num_row_groups):
+            s = md.row_group(g).column(i).statistics
+            if s is None or not s.has_null_count or s.null_count:
+                return True
+        return False
+
+    def _carry_or_rewrite(
+        self, op, data, col, lo, hi, remainder, s_cols, drop_inside=False
+    ) -> int:
+        """The file-level commit of ``replace_where`` and ``merge_upsert``
+        (``op``): stage ``data``, then against the tip's manifest carry
+        files whose committed ``col`` range is disjoint from [lo, hi]
+        over by NAME (metadata only — the 100 TB case: a daily reload
+        rewrites one day's files, not the table); with ``drop_inside``,
+        drop files wholly inside the range and free of NULL ``col``
+        values; rewrite every other file (including files without
+        stats) through ``remainder(df)``."""
+        staged = self._write_data_files(data, s_cols)
+
+        def make(parent, pm):
+            if parent is None:
+                raise FileNotFoundError(f"{op} needs a committed table")
+            stats = pm.get("stats", {})
+            keep, rewrite = [], []
+            for f in pm["files"]:
+                where = _span(stats.get(f, {}).get(col), lo, hi)
+                if where == "disjoint":
+                    keep.append(f)
+                elif not (
+                    drop_inside and where == "inside" and not self._has_nulls(f, col)
+                ):
+                    rewrite.append(f)
+            rw = ([], 0, {})
+            if rewrite:
+                rw = self._write_data_files(
+                    remainder(self.spark.read.parquet(*self._paths(rewrite))),
+                    s_cols,
+                )
+            return {
+                "mode": f"{op}:{col}",
+                "files": keep + rw[0] + staged[0],
+                "n_rows": self._kept_rows(keep, stats) + rw[1] + staged[1],
+                "stats": {
+                    **{f: stats[f] for f in keep if f in stats}, **rw[2], **staged[2]
+                },
+                "schema": pm.get("schema", data.schema.json()),
+            }
+
+        return self._commit_next(make, staged[0])
+
     def _write_data_files(
         self, df: DataFrame, stats_cols: list[str] | None = None
     ) -> tuple[list[str], int, dict]:
@@ -276,8 +408,6 @@ class VersionedTable:
         names = []
         n_rows = 0
         stats: dict[str, dict] = {}
-        import pyarrow.parquet as pq
-
         for f in sorted(os.listdir(stage)):
             if not f.endswith(".parquet"):
                 continue
@@ -311,8 +441,6 @@ class VersionedTable:
             stats[name] = fstats
             os.replace(src, os.path.join(self._ddir, name))
             names.append(name)
-        import shutil
-
         shutil.rmtree(stage, ignore_errors=True)
         return names, n_rows, stats
 
@@ -356,94 +484,47 @@ class VersionedTable:
         if mode not in ("overwrite", "append"):
             raise ValueError("mode must be 'overwrite' or 'append'")
         names, n_rows, stats = self._write_data_files(df, stats_cols)
-        os.makedirs(self._mdir, exist_ok=True)
-        while True:
-            versions = self._versions()
-            parent = versions[-1] if versions else None
-            files = list(names)
-            total = n_rows
-            all_stats = dict(stats)
-            txns: dict[str, int] = {}
-            schema_json = df.schema.json()
-            if parent is not None:
-                pm = self._manifest(parent)
-                txns = dict(pm.get("txns", {}))
-                if mode == "append":
-                    files = pm["files"] + files
-                    total = pm["n_rows"] + n_rows
-                    all_stats = {**pm.get("stats", {}), **all_stats}
-                    # schema enforcement (Delta semantics): an append
-                    # must match the TABLE schema, and the manifest keeps
-                    # carrying the parent's schema — an append never
-                    # silently flips the stored schema that empty-prune
-                    # reads later materialize. Only overwrite may evolve.
-                    parent_schema = pm.get("schema")
-                    if parent_schema is not None:
-                        if _schema_fields(parent_schema) != _schema_fields(
-                            schema_json
-                        ):
-                            if merge_schema:
-                                try:
-                                    schema_json = _merge_schemas(
-                                        parent_schema, schema_json
-                                    )
-                                except ValueError:
-                                    for n in names:
-                                        try:
-                                            os.remove(
-                                                os.path.join(self._ddir, n)
-                                            )
-                                        except OSError:
-                                            pass
-                                    raise
-                            else:
-                                for n in names:
-                                    try:
-                                        os.remove(os.path.join(self._ddir, n))
-                                    except OSError:
-                                        pass
-                                raise ValueError(
-                                    "append schema mismatch: table has "
-                                    f"{_schema_fields(parent_schema)}, batch has "
-                                    f"{_schema_fields(schema_json)}; use "
-                                    "mode='overwrite' to evolve the schema, or "
-                                    "merge_schema=True to widen it"
-                                )
-                        else:
-                            schema_json = parent_schema
+        batch_schema = df.schema.json()
+
+        def make(parent, pm):
+            body = {"mode": mode, "files": names, "n_rows": n_rows, "stats": stats}
+            schema_json = batch_schema
+            if mode == "append" and parent is not None:
+                body["files"] = pm["files"] + names
+                body["n_rows"] = pm["n_rows"] + n_rows
+                body["stats"] = {**pm.get("stats", {}), **stats}
+                # schema enforcement (Delta semantics): an append must
+                # match the TABLE schema, and the manifest keeps carrying
+                # the parent's schema — an append never silently flips
+                # the stored schema that empty-prune reads later
+                # materialize. Only overwrite may evolve.
+                parent_schema = pm.get("schema") or batch_schema
+                if _schema_fields(parent_schema) == _schema_fields(batch_schema):
+                    schema_json = parent_schema
+                elif merge_schema:
+                    schema_json = _merge_schemas(parent_schema, batch_schema)
+                else:
+                    raise ValueError(
+                        "append schema mismatch: table has "
+                        f"{_schema_fields(parent_schema)}, batch has "
+                        f"{_schema_fields(batch_schema)}; use "
+                        "mode='overwrite' to evolve the schema, or "
+                        "merge_schema=True to widen it"
+                    )
+            body["schema"] = schema_json
             if txn is not None:
                 app_id, batch_id = txn
+                txns = dict(pm.get("txns", {}))
                 if txns.get(app_id, -1) >= batch_id:
                     # this transaction already committed (a replayed
                     # micro-batch after a crash between sink write and
-                    # checkpoint commit): drop our files, change nothing
-                    for n in names:
-                        try:
-                            os.remove(os.path.join(self._ddir, n))
-                        except OSError:
-                            pass
-                    return -1
+                    # checkpoint commit): change nothing
+                    return None
                 txns[app_id] = batch_id
-            v = (parent + 1) if parent is not None else 0
-            manifest = {
-                "version": v,
-                "mode": mode,
-                "files": files,
-                "n_rows": total,
-                "stats": all_stats,
-                "txns": txns,
-                "schema": schema_json,
-                "parent": parent,
-                "ts": time.time(),
-            }
-            try:
-                with open(
-                    os.path.join(self._mdir, f"v{v:08d}.json"), "x"
-                ) as fh:
-                    json.dump(manifest, fh)
-                return v
-            except FileExistsError:
-                continue  # lost the CAS — recompute against the new tip
+                body["txns"] = txns
+            return body
+
+        return self._commit_next(make, names)
 
     def read(
         self,
@@ -459,89 +540,63 @@ class VersionedTable:
         kept). This prunes at FILE LISTING, before parquet footers are
         even opened; the caller still applies the row-level filter
         (skipping is a superset guarantee, same as Delta/Iceberg)."""
-        versions = self._versions()
-        if not versions:
-            raise FileNotFoundError(f"no committed version at {self.path}")
-        v = versions[-1] if version is None else version
-        if v not in versions:
-            raise FileNotFoundError(
-                f"version {v} not found (have {versions[0]}..{versions[-1]}; "
-                "it may have been vacuumed)"
-            )
-        m = self._manifest(v)
-        files = m["files"]
-        if prune is not None:
-            col, lo, hi = prune
-            lo, hi = _norm_bound(lo), _norm_bound(hi)
-            stats = m.get("stats", {})
-
-            def _keep(name: str) -> bool:
-                s = stats.get(name, {}).get(col)
-                if s is None:
-                    return True  # no stats -> cannot exclude
-                return not (s["max"] < lo or s["min"] > hi)
-
-            files = [f for f in files if _keep(f)]
-        if not files:
-            # empty result must still carry the TABLE schema so the
-            # caller's documented row-level re-filter resolves columns:
-            # prefer the schema recorded at commit; else derive it from
-            # the full (unpruned) file list with a zero-row limit
-            sj = m.get("schema")
-            if sj is not None:
-                from pyspark.sql.types import StructType
-
-                return self.spark.createDataFrame([], StructType.fromJson(json.loads(sj)))
-            if m["files"]:
-                return self.spark.read.parquet(
-                    *[os.path.join(self._ddir, f) for f in m["files"]]
-                ).limit(0)
-            return self.spark.createDataFrame([], "dummy string").limit(0)
-        reader = self.spark.read
+        m = self._snapshot(version)
+        files = self._pruned(m, prune)
         sj = m.get("schema")
-        if sj is not None:
+        schema = None if sj is None else StructType.fromJson(json.loads(sj))
+        if files:
             # read under the MANIFEST schema, not footer inference: after
             # a merge_schema append the visible files are heterogeneous,
             # and the explicit schema makes files predating a column
             # yield NULL for it (parquet resolves columns by name) while
             # also skipping the multi-footer schema reconciliation.
-            from pyspark.sql.types import StructType
+            reader = self.spark.read
+            if schema is not None:
+                reader = reader.schema(schema)
+            return reader.parquet(*self._paths(files))
+        # empty result must still carry the TABLE schema so the caller's
+        # documented row-level re-filter resolves columns: prefer the
+        # schema recorded at commit; else derive it from the full
+        # (unpruned) file list with a zero-row limit
+        if schema is not None:
+            return self.spark.createDataFrame([], schema)
+        if m["files"]:
+            return self.spark.read.parquet(*self._paths(m["files"])).limit(0)
+        return self.spark.createDataFrame([], "dummy string").limit(0)
 
-            reader = reader.schema(StructType.fromJson(json.loads(sj)))
-        return reader.parquet(*[os.path.join(self._ddir, f) for f in files])
+    @staticmethod
+    def _pruned(m: dict, prune: tuple[str, object, object] | None) -> list[str]:
+        """The files of manifest ``m`` a ``prune=(col, lo, hi)`` keeps."""
+        if prune is None:
+            return m["files"]
+        col, lo, hi = prune
+        stats = m.get("stats", {})
+        return [
+            f
+            for f in m["files"]
+            if _span(stats.get(f, {}).get(col), lo, hi) != "disjoint"
+        ]
 
     def pruned_file_count(
         self, version: int | None, prune: tuple[str, object, object]
     ) -> tuple[int, int]:
         """(files selected, files total) for a prune predicate — the
         observable skipping ratio (test/ops hook)."""
-        versions = self._versions()
-        v = versions[-1] if version is None else version
-        m = self._manifest(v)
-        col, lo, hi = prune
-        lo, hi = _norm_bound(lo), _norm_bound(hi)
-        stats = m.get("stats", {})
-        kept = [
-            f
-            for f in m["files"]
-            if (s := stats.get(f, {}).get(col)) is None
-            or not (s["max"] < lo or s["min"] > hi)
-        ]
-        return len(kept), len(m["files"])
+        m = self._snapshot(version)
+        return len(self._pruned(m, prune)), len(m["files"])
 
     def _kept_rows(self, keep: list, stats: dict) -> int:
         """Row total of carried-over files, from manifest metadata when
         every file carries the "__rows" footer count, falling back to one
-        Spark count for manifests written before files carried it — maintenance commits must not re-scan untouched
-        data at 100 TB just to fill in ``n_rows``."""
+        Spark count for manifests written before files carried it —
+        maintenance commits must not re-scan untouched data at 100 TB
+        just to fill in ``n_rows``."""
         if not keep:
             return 0
         rows = [stats.get(f, {}).get("__rows") for f in keep]
         if all(r is not None for r in rows):
             return sum(rows)
-        return self.spark.read.parquet(
-            *[os.path.join(self._ddir, f) for f in keep]
-        ).count()
+        return self.spark.read.parquet(*self._paths(keep)).count()
 
     def replace_where(
         self,
@@ -560,86 +615,26 @@ class VersionedTable:
         - files whose committed range is DISJOINT from [lo, hi] carry
           over untouched (metadata only — the 100 TB case: a daily
           reload rewrites one day's files, not the table);
-        - files fully INSIDE the range are dropped;
+        - files fully INSIDE the range are dropped (unless their footer
+          shows NULL ``col`` values);
         - straddling files (or files without stats) are REWRITTEN
           minus their in-range rows.
 
-        The commit retries through the same CAS loop; a lost race
-        recomputes the file partition against the new tip."""
-        from pyspark.sql import functions as F
-
-        bad = df.filter(
-            (F.col(col) < F.lit(lo)) | (F.col(col) > F.lit(hi))
-        ).count()
+        A NULL ``col`` does not match the predicate (Delta semantics):
+        NULL-keyed table rows are kept and NULL-keyed ``df`` rows are
+        rejected. The commit retries through the one CAS loop; a lost
+        race recomputes the file partition against the new tip."""
+        c = F.col(col)
+        outside = c.isNull() | (c < F.lit(lo)) | (c > F.lit(hi))
+        bad = df.filter(outside).count()
         if bad:
             raise ValueError(
                 f"replace_where: {bad} rows fall outside [{lo}, {hi}]"
             )
-        s_cols = stats_cols if stats_cols is not None else [col]
-        new_names, new_rows, new_stats = self._write_data_files(df, s_cols)
-        # stats are stored in _jsonable form (dates -> isoformat); the
-        # file-partition comparison must run in that same domain
-        slo, shi = _norm_bound(lo), _norm_bound(hi)
-        os.makedirs(self._mdir, exist_ok=True)
-        while True:
-            versions = self._versions()
-            if not versions:
-                raise FileNotFoundError("replace_where needs a committed table")
-            parent = versions[-1]
-            pm = self._manifest(parent)
-            stats = pm.get("stats", {})
-            keep, rewrite = [], []
-            for f in pm["files"]:
-                s = stats.get(f, {}).get(col)
-                if s is None:
-                    rewrite.append(f)  # unknown range -> must inspect
-                elif s["max"] < slo or s["min"] > shi:
-                    keep.append(f)  # disjoint -> carry over untouched
-                elif s["min"] >= slo and s["max"] <= shi:
-                    pass  # fully inside -> dropped
-                else:
-                    rewrite.append(f)
-            rw_names: list[str] = []
-            rw_rows = 0
-            rw_stats: dict = {}
-            if rewrite:
-                remainder = self.spark.read.parquet(
-                    *[os.path.join(self._ddir, f) for f in rewrite]
-                ).filter((F.col(col) < F.lit(lo)) | (F.col(col) > F.lit(hi)))
-                rw_names, rw_rows, rw_stats = self._write_data_files(
-                    remainder, s_cols
-                )
-            kept_rows = self._kept_rows(keep, stats)
-            files = keep + rw_names + new_names
-            all_stats = {
-                **{f: stats[f] for f in keep if f in stats},
-                **rw_stats,
-                **new_stats,
-            }
-            v = parent + 1
-            manifest = {
-                "version": v,
-                "mode": f"replace_where:{col}",
-                "files": files,
-                "n_rows": kept_rows + rw_rows + new_rows,
-                "stats": all_stats,
-                # carry the parent's per-app streaming high-water marks:
-                # a maintenance op between micro-batches must not reopen
-                # the exactly-once replay window (Delta keeps txn appId
-                # versions across every commit kind)
-                "txns": dict(pm.get("txns", {})),
-                "schema": pm.get("schema", df.schema.json()),
-                "parent": parent,
-                "ts": time.time(),
-            }
-            try:
-                with open(
-                    os.path.join(self._mdir, f"v{v:08d}.json"), "x"
-                ) as fh:
-                    json.dump(manifest, fh)
-                return v
-            except FileExistsError:
-                continue
+        return self._carry_or_rewrite(
+            "replace_where", df, col, lo, hi, lambda d: d.filter(outside),
+            stats_cols if stats_cols is not None else [col], drop_inside=True,
+        )
 
     def merge_upsert(
         self,
@@ -656,8 +651,6 @@ class VersionedTable:
         The batch must be unique per key (enforced — a MERGE with
         duplicate source keys is ambiguous, the same error Delta
         raises)."""
-        from pyspark.sql import functions as F
-
         dup = (
             batch.groupBy(key).agg(F.count(F.lit(1)).alias("__n"))
             .filter(F.col("__n") > 1)
@@ -668,59 +661,12 @@ class VersionedTable:
         lohi = batch.agg(
             F.min(key).alias("lo"), F.max(key).alias("hi")
         ).first()
-        s_cols = stats_cols if stats_cols is not None else [key]
-        new_names, new_rows, new_stats = self._write_data_files(batch, s_cols)
-        blo, bhi = _norm_bound(lohi.lo), _norm_bound(lohi.hi)
-        os.makedirs(self._mdir, exist_ok=True)
-        while True:
-            versions = self._versions()
-            if not versions:
-                raise FileNotFoundError("merge_upsert needs a committed table")
-            parent = versions[-1]
-            pm = self._manifest(parent)
-            stats = pm.get("stats", {})
-            keep, rewrite = [], []
-            for f in pm["files"]:
-                s = stats.get(f, {}).get(key)
-                if s is not None and (s["max"] < blo or s["min"] > bhi):
-                    keep.append(f)
-                else:
-                    rewrite.append(f)
-            rw_names: list[str] = []
-            rw_rows = 0
-            rw_stats: dict = {}
-            if rewrite:
-                remainder = self.spark.read.parquet(
-                    *[os.path.join(self._ddir, f) for f in rewrite]
-                ).join(batch.select(key), key, "left_anti")
-                rw_names, rw_rows, rw_stats = self._write_data_files(
-                    remainder, s_cols
-                )
-            kept_rows = self._kept_rows(keep, stats)
-            v = parent + 1
-            manifest = {
-                "version": v,
-                "mode": f"merge_upsert:{key}",
-                "files": keep + rw_names + new_names,
-                "n_rows": kept_rows + rw_rows + new_rows,
-                "stats": {
-                    **{f: stats[f] for f in keep if f in stats},
-                    **rw_stats,
-                    **new_stats,
-                },
-                "txns": dict(pm.get("txns", {})),
-                "schema": pm.get("schema", batch.schema.json()),
-                "parent": parent,
-                "ts": time.time(),
-            }
-            try:
-                with open(
-                    os.path.join(self._mdir, f"v{v:08d}.json"), "x"
-                ) as fh:
-                    json.dump(manifest, fh)
-                return v
-            except FileExistsError:
-                continue
+        keys = batch.select(key)
+        return self._carry_or_rewrite(
+            "merge_upsert", batch, key, lohi.lo, lohi.hi,
+            lambda d: d.join(keys, key, "left_anti"),
+            stats_cols if stats_cols is not None else [key],
+        )
 
     def compact(
         self,
@@ -807,17 +753,12 @@ class VersionedTable:
             raise ValueError("sort_by and zorder_by are mutually exclusive")
         if zorder_quantize != "linear" and not zorder_by:
             raise ValueError("zorder_quantize requires zorder_by")
-        versions = self._versions()
-        if not versions:
-            raise FileNotFoundError(f"no committed version at {self.path}")
-        base = versions[-1]
-        base_m = self._manifest(base)
+        base_m = self._snapshot(None)
+        base = base_m["version"]
         df = self.read(version=base)
         if zorder_quantize not in ("linear", "rank"):
             raise ValueError("zorder_quantize must be 'linear' or 'rank'")
         if zorder_by:
-            from pyspark.sql import functions as F
-
             # STRING z-order columns get a dictionary-rank surrogate:
             # the cast-to-double inside the z key would quantize every
             # string to bucket 0 (silent zero z-resolution). A
@@ -982,66 +923,35 @@ class VersionedTable:
         else:
             df = df.repartition(num_files)
         names, n_rows, stats = self._write_data_files(df, stats_cols)
+        n_base = len(base_m["files"])
 
-        def _abort(reason: str):
-            for n in names:
-                try:
-                    os.remove(os.path.join(self._ddir, n))
-                except OSError:
-                    pass
-            raise ConcurrentCompactionError(
-                f"compaction of version {base} aborted: {reason}; "
-                "rerun against the current tip"
-            )
-
-        while True:
-            tip = self._versions()[-1]
-            tm = self._manifest(tip)
-            extra_files: list[str] = []
-            extra_rows = 0
-            extra_stats: dict[str, dict] = {}
+        def make(tip, tm):
             if tip != base:
                 try:
-                    interleaved_ok = all(
+                    appends_only = all(
                         self._manifest(v).get("mode") == "append"
                         for v in range(base + 1, tip + 1)
                     )
                 except OSError:
-                    interleaved_ok = False  # manifest vacuumed mid-flight
-                if (
-                    not interleaved_ok
-                    or tm["files"][: len(base_m["files"])] != base_m["files"]
-                ):
-                    _abort(
-                        "a non-append commit interleaved (overwrite/"
-                        "rollback/compaction replaced the base snapshot)"
+                    appends_only = False  # manifest vacuumed mid-flight
+                if not appends_only or tm["files"][:n_base] != base_m["files"]:
+                    raise ConcurrentCompactionError(
+                        f"compaction of version {base} aborted: a non-append "
+                        "commit interleaved (overwrite/rollback/compaction "
+                        "replaced the base snapshot); rerun against the "
+                        "current tip"
                     )
-                extra_files = tm["files"][len(base_m["files"]) :]
-                extra_rows = tm["n_rows"] - base_m["n_rows"]
-                tstats = tm.get("stats", {})
-                extra_stats = {
-                    f: tstats[f] for f in extra_files if f in tstats
-                }
-            v = tip + 1
-            manifest = {
-                "version": v,
+            extra = tm["files"][n_base:]
+            tstats = tm.get("stats", {})
+            return {
                 "mode": "overwrite",
-                "files": names + extra_files,
-                "n_rows": n_rows + extra_rows,
-                "stats": {**stats, **extra_stats},
-                "txns": dict(tm.get("txns", {})),
+                "files": names + extra,
+                "n_rows": n_rows + tm["n_rows"] - base_m["n_rows"],
+                "stats": {**stats, **{f: tstats[f] for f in extra if f in tstats}},
                 "schema": tm.get("schema"),
-                "parent": tip,
-                "ts": time.time(),
             }
-            try:
-                with open(
-                    os.path.join(self._mdir, f"v{v:08d}.json"), "x"
-                ) as fh:
-                    json.dump(manifest, fh)
-                return v
-            except FileExistsError:
-                continue  # lost the CAS — re-validate against the new tip
+
+        return self._commit_next(make, names)
 
     def history(self) -> list[VersionInfo]:
         out = []
@@ -1063,34 +973,17 @@ class VersionedTable:
         """Commit a new version replaying ``to_version``'s file list —
         metadata-only (no data copied, no history rewritten)."""
         m = self._manifest(to_version)
-        os.makedirs(self._mdir, exist_ok=True)
-        while True:
-            versions = self._versions()
-            parent = versions[-1]
-            pm = self._manifest(parent)
-            v = parent + 1
-            manifest = {
-                "version": v,
+        # the table's data travels back; the streaming replay-protection
+        # high-water marks (txns) ride the tip forward
+        return self._commit_next(
+            lambda parent, pm: {
                 "mode": f"rollback:{to_version}",
                 "files": m["files"],
                 "n_rows": m["n_rows"],
                 "stats": m.get("stats", {}),
-                # txns come from the PARENT (current tip), not the
-                # rollback target: the table's data travels back, the
-                # streaming replay-protection high-water marks must not
-                "txns": dict(pm.get("txns", {})),
                 "schema": m.get("schema", pm.get("schema")),
-                "parent": parent,
-                "ts": time.time(),
             }
-            try:
-                with open(
-                    os.path.join(self._mdir, f"v{v:08d}.json"), "x"
-                ) as fh:
-                    json.dump(manifest, fh)
-                return v
-            except FileExistsError:
-                continue
+        )
 
     def vacuum(self, retain_last: int = 1, grace_seconds: float = 600.0) -> dict:
         """Drop all but the last ``retain_last`` versions and delete

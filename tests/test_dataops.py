@@ -169,26 +169,6 @@ def test_minhash_matches_exact_on_high_similarity(docs):
     assert mh == exact
 
 
-def test_minhash_candidate_bounded_verify_equals_default(docs):
-    """verify_candidates_only=True (the 100 TB production knob: corpus
-    semi-joined to candidate-pair ids before the verify re-shingle) must
-    return exactly the default path's verified pairs — non-candidate
-    shingles/sizes are dropped by the inner joins either way."""
-    base = sorted(
-        map(tuple, dedup.minhash_dedup_pairs(docs, "doc_id", "text").collect())
-    )
-    bounded = sorted(
-        map(
-            tuple,
-            dedup.minhash_dedup_pairs(
-                docs, "doc_id", "text", verify_candidates_only=True
-            ).collect(),
-        )
-    )
-    assert base == bounded
-    assert base  # non-vacuous: planted near-dups must surface
-
-
 def test_incremental_exact_dedup_matches_recrawls_only(spark):
     corpus = spark.createDataFrame(
         [(1, "a b c"), (2, "x y z"), (3, "a b c")], ["doc_id", "text"]

@@ -10,7 +10,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from f1_data_engineering_machine_learning_spark.plans.versioned import VersionedTable
+from f1_data_engineering_machine_learning_spark.plans.versioned import (
+    VersionedTable,
+    _interleave,
+)
 
 
 def _ids(df):
@@ -93,6 +96,21 @@ def test_vacuum_retains_window_and_deletes_unreachable(spark, tmp_path):
     assert on_disk == live
 
 
+def _race_next_commit(t, racer, df, **commit_kw):
+    """Make ``t``'s next commit lose its exclusive create: right after
+    that commit reads the tip, ``racer`` appends ``df`` (landing the
+    version ``t`` was about to create)."""
+    read_tip = t._versions
+
+    def then_race():
+        versions = read_tip()
+        t._versions = read_tip
+        racer.commit(df, mode="append", **commit_kw)
+        return versions
+
+    t._versions = then_race
+
+
 def test_concurrent_commit_cas_composes_appends(spark, tmp_path):
     """Two writers racing for the same version number: the loser's
     exclusive-create fails and it retries against the winner's state,
@@ -101,38 +119,81 @@ def test_concurrent_commit_cas_composes_appends(spark, tmp_path):
     t2 = VersionedTable(spark, str(tmp_path / "tbl"))
     t1.commit(spark.range(2))
 
-    # interleave: both writers compute their data files first, then
-    # race the manifest create. Emulate by pre-writing t2's files via
-    # the internal API, committing t1, then finishing t2's commit —
-    # t2's loop recomputes parent and lands on the next version.
-    names2, rows2, _stats2 = t2._write_data_files(spark.range(10, 12))
-    t1.commit(spark.range(5, 7), mode="append")
-
-    import json, time as _time
-
-    # replay commit()'s loop body with the pre-written files
-    while True:
-        versions = t2._versions()
-        parent = versions[-1]
-        pm = t2._manifest(parent)
-        manifest = {
-            "version": parent + 1,
-            "mode": "append",
-            "files": pm["files"] + names2,
-            "n_rows": pm["n_rows"] + rows2,
-            "parent": parent,
-            "ts": _time.time(),
-        }
-        try:
-            with open(
-                os.path.join(t2._mdir, f"v{parent + 1:08d}.json"), "x"
-            ) as fh:
-                json.dump(manifest, fh)
-            break
-        except FileExistsError:
-            continue
-
+    # t2 reads tip v0, t1's append takes v1, t2's create of v1 fails and
+    # its retry lands on v2 on top of t1's files
+    _race_next_commit(t2, t1, spark.range(5, 7))
+    assert t2.commit(spark.range(10, 12), mode="append") == 2
+    assert t2._manifest(2)["parent"] == 1
     assert _ids(t1.read()) == [0, 1, 5, 6, 10, 11]
+    assert [h.n_rows for h in t1.history()] == [2, 4, 6]
+
+
+def test_lost_create_retries_maintenance_ops_on_new_tip(spark, tmp_path):
+    """replace_where, merge_upsert and rollback each lose their exclusive
+    create to an append that lands after they read the tip: each retries
+    on the racer's version, so the racing rows survive wherever the
+    operation's semantics keep them, and the racer's txn high-water
+    rides forward."""
+    t = VersionedTable(spark, str(tmp_path / "tbl"))
+    racer = VersionedTable(spark, str(tmp_path / "tbl"))
+    t.commit(spark.range(100).repartitionByRange(4, "id"), stats_cols=["id"])
+
+    # replace_where [0, 9]: racing row 500 is outside the slice and
+    # survives; racing row 5 is inside it and is replaced like the rest
+    _race_next_commit(
+        t, racer, spark.createDataFrame([(5,), (500,)], "id long"),
+        stats_cols=["id"], txn=("racer", 0),
+    )
+    v = t.replace_where(spark.range(0, 10), "id", 0, 9)
+    assert v == 2 and t._manifest(v)["parent"] == 1
+    assert _ids(t.read()) == list(range(100)) + [500]
+    assert t._manifest(v)["txns"] == {"racer": 0}
+
+    # merge_upsert keys {7, 600}: racing 600 is matched and updated once,
+    # racing 700 is untouched and survives
+    _race_next_commit(
+        t, racer, spark.createDataFrame([(600,), (700,)], "id long"),
+        stats_cols=["id"], txn=("racer", 1),
+    )
+    v = t.merge_upsert(spark.createDataFrame([(7,), (600,)], "id long"), "id")
+    assert v == 4 and t._manifest(v)["parent"] == 3
+    assert _ids(t.read()) == list(range(100)) + [500, 600, 700]
+    assert t._manifest(v)["n_rows"] == 103
+    assert t._manifest(v)["txns"] == {"racer": 1}
+
+    # rollback to v0: the table's data travels back (the racing rows go
+    # with everything after v0), the racer's txn high-water does not
+    _race_next_commit(
+        t, racer, spark.createDataFrame([(800,)], "id long"),
+        stats_cols=["id"], txn=("racer", 2),
+    )
+    v = t.rollback(0)
+    assert v == 6 and t._manifest(v)["parent"] == 5
+    assert _ids(t.read()) == list(range(100))
+    assert t._manifest(v)["txns"] == {"racer": 2}
+    assert _ids(t.read(5)) == list(range(100)) + [500, 600, 700, 800]
+
+
+def test_interleave_matches_morton_reference(spark):
+    """Two columns through the shared Morton interleave: bit i of ``a``
+    lands at position 2i and bit i of ``b`` at 2i+1."""
+
+    def morton(a: int, b: int, bits: int = 16) -> int:
+        out = 0
+        for i in range(bits):
+            out |= ((a >> i) & 1) << (2 * i)
+            out |= ((b >> i) & 1) << (2 * i + 1)
+        return out
+
+    rows = [(0, 0), (1, 0), (0, 1), (5, 9), (255, 1), (1023, 511)]
+    df = spark.createDataFrame(rows, "a long, b long")
+    got = {
+        (r.a, r.b): r.z
+        for r in df.select(
+            "a", "b", _interleave([F.col("a"), F.col("b")], 16).alias("z")
+        ).collect()
+    }
+    assert got == {(a, b): morton(a, b) for a, b in rows}
 
 
 def test_filters_push_into_snapshot_scan(spark, tmp_path):
@@ -218,6 +279,39 @@ def test_replace_where_drops_fully_inside_files(spark, tmp_path):
     m1 = t._manifest(1)
     assert not (set(inside) & set(m1["files"]))  # dropped, not rewritten
     assert _ids(t.read()) == list(range(400))
+
+
+def test_replace_where_null_keys_kept_and_rejected(spark, tmp_path):
+    """A NULL key does not match the replace_where predicate (Delta
+    semantics): NULL-keyed table rows survive the replace, both in a
+    file that straddles the range and in one whose non-NULL keys lie
+    wholly inside it, and a NULL-keyed replacement row is rejected as
+    out of range."""
+    schema = "k long, v string"
+    t = VersionedTable(spark, str(tmp_path / "tbl"))
+    t.commit(
+        spark.createDataFrame(
+            [(1, "a"), (5, "b"), (None, "c"), (9, "d")], schema
+        ).coalesce(1),
+        stats_cols=["k"],
+    )
+    t.commit(
+        spark.createDataFrame([(4, "e"), (None, "f")], schema).coalesce(1),
+        mode="append",
+        stats_cols=["k"],
+    )
+    t.replace_where(spark.createDataFrame([(5, "b2")], schema), "k", 4, 6)
+    assert {tuple(r) for r in t.read().collect()} == {
+        (1, "a"), (5, "b2"), (None, "c"), (9, "d"), (None, "f")
+    }
+    assert t._manifest(2)["n_rows"] == 5
+
+    with pytest.raises(ValueError, match="1 rows fall outside"):
+        t.replace_where(
+            spark.createDataFrame([(5, "x"), (None, "outside")], schema),
+            "k", 4, 6,
+        )
+    assert len(t._versions()) == 3  # nothing committed
 
 
 def test_merge_upsert_updates_and_inserts(spark, tmp_path):
